@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.concurrent.TrieMap
@@ -287,16 +287,31 @@ object DiabetesPipeline {
           .otherwise(lit("HEALTHY")))
       .withColumn("created_at", rc.now)
 
+  /** Pearson correlation of `x` and `y` over the rows where both are
+    * non-null; NULL when either column is constant there (or fewer than
+    * two rows remain) — what `corr` returns without ANSI mode. Spark's
+    * `corr` divides by the variance product unguarded, so under the
+    * default ANSI mode a single group with a constant column (median
+    * imputation makes that common in small groups) raised
+    * DIVIDE_BY_ZERO for the whole node. */
+  private[graft] def corrOrNull(x: String, y: String): Column = {
+    val both = col(x).isNotNull && col(y).isNotNull
+    val xs = when(both, col(x).cast(DoubleType))
+    val ys = when(both, col(y).cast(DoubleType))
+    val spread = var_pop(xs) * var_pop(ys)
+    when(spread > 0, covar_pop(xs, ys) / sqrt(spread))
+  }
+
   /** Gold: feature correlation — diabetes_etl_pipeline.py:589-622. */
   def featureCorrelation(silver: DataFrame, rc: RunContext): DataFrame =
     silver
       .groupBy("age_group", "bmi_category")
       .agg(
         count(lit(1)).as("sample_size"),
-        corr("Glucose", "BMI").as("glucose_bmi_corr"),
-        corr("Age", "Pregnancies").as("age_pregnancies_corr"),
-        corr("BloodPressure", "BMI").as("bp_bmi_corr"),
-        corr("Insulin", "Glucose").as("insulin_glucose_corr"),
+        corrOrNull("Glucose", "BMI").as("glucose_bmi_corr"),
+        corrOrNull("Age", "Pregnancies").as("age_pregnancies_corr"),
+        corrOrNull("BloodPressure", "BMI").as("bp_bmi_corr"),
+        corrOrNull("Insulin", "Glucose").as("insulin_glucose_corr"),
         round(avg("Outcome"), 3).as("diabetes_prevalence"))
       .withColumn("correlation_strength", // :614-617 (§2.8 abs)
         when(abs(col("glucose_bmi_corr")) > 0.7, lit("Strong"))

@@ -2649,11 +2649,6 @@ object TxLog {
     finally s.close()
   }
 
-  /** One distributed pass over the just-staged files: per-file row count
-    * and per-column min/max/null-count, keyed by `_metadata.file_path`.
-    * The job reads only this commit's files — the write-side stats cost
-    * Delta pays inline, paid here as a second scan of fresh (page-cached)
-    * data. Collect is bounded: files-per-commit × columns. */
   /** Resolve the [[Stats]] policy for a PHYSICAL schema: which columns
     * carry stats, and the truncation applied to string bounds. */
   private def statsPolicy(props: Map[String, String], schema: StructType)
@@ -2711,39 +2706,11 @@ object TxLog {
       val (indexed, applyPolicy) = statsPolicy(snap.props, phys)
       val fields = phys.fields
         .filter(f => statSupported(f.dataType) && indexed(f.name))
-      val byPath: Map[String, Map[String, ColStats]] =
-        if (fields.isEmpty) Map.empty
-        else {
-          val df = spark.read.schema(phys)
-            .parquet(liveFiles.map(f => Paths.get(dir, f.path).toString): _*)
-          val aggs: Seq[Column] = fields.toSeq.flatMap { f =>
-            Seq(min(col(f.name)).cast(StringType).as(s"__min_${f.name}"),
-              max(col(f.name)).cast(StringType).as(s"__max_${f.name}"),
-              sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"))
-          }
-          val rows = df.groupBy(col("_metadata.file_path").as("__path"))
-            .agg(aggs.head, aggs.tail: _*).collect()
-          // `_metadata.file_path` is a URI; key by the scheme-stripped
-          // absolute path so the per-file lookup is O(1), not an
-          // endsWith scan per live file.
-          val rowByAbs = rows.map { r =>
-            r.getString(0).stripPrefix("file:") -> r
-          }.toMap
-          liveFiles.flatMap { f =>
-            val abs = Paths.get(dir, f.path).toAbsolutePath.toString
-            rowByAbs.get(abs)
-              .orElse(rows.find(_.getString(0).endsWith(f.path))).map { r =>
-              f.path -> fields.map { fd =>
-                fd.name -> applyPolicy(fd.name, ColStats(fd.dataType.simpleString,
-                  Option(r.getAs[String](s"__min_${fd.name}")),
-                  Option(r.getAs[String](s"__max_${fd.name}")),
-                  r.getAs[Long](s"__nulls_${fd.name}")))
-              }.toMap
-            }
-          }.toMap
-        }
+      val byPath =
+        if (fields.isEmpty) Map.empty[String, (Long, Map[String, ColStats])]
+        else readFileStats(spark, dir, liveFiles.map(_.path), phys, fields.toSeq, applyPolicy)
       val adds = liveFiles.map(f => f.copy(
-        stats = byPath.getOrElse(f.path, Map.empty), dataChange = false))
+        stats = byPath.get(f.path).fold(Map.empty[String, ColStats])(_._2), dataChange = false))
       val attempt = snap.version + 1
       val content = commitJson(attempt, "computeStats",
         System.currentTimeMillis(), adds, Nil, None, None, None)
@@ -2785,50 +2752,96 @@ object TxLog {
     mdir.resolve("manifest")
   }
 
-  private def collectAdds(spark: SparkSession, dir: String, sub: String,
-      schema: StructType): Seq[AddFile] = {
-    val names = listStaged(dir, sub)
-    if (names.isEmpty) return Nil
-    // Stats policy ([[Stats]]) from the current head — advisory
-    // metadata, so reading the head rather than the staging snapshot is
-    // benign (and creation-time staging simply takes the defaults).
+  /** The stats columns of a staged schema under the table's current
+    * [[Stats]] policy, with the policy's string truncation. The policy
+    * comes from the current head — advisory metadata, so reading the
+    * head rather than the staging snapshot is benign (and creation-time
+    * staging simply takes the defaults). */
+  private def stagedStatsPolicy(dir: String, schema: StructType)
+      : (Seq[StructField], (String, ColStats) => ColStats) = {
     val props = headSnapshot(dir).map(_.props).getOrElse(Map.empty)
     val (indexed, applyPolicy) = statsPolicy(props, schema)
-    // Schema pinned from the staged frame: no per-commit footer inference.
-    val df = spark.read.schema(schema).parquet(Paths.get(dir, sub).toString)
-    val fields = df.schema.fields
-      .filter(f => statSupported(f.dataType) && indexed(f.name))
-    val aggs: Seq[Column] = count(lit(1)).as("__rows") +:
-      fields.toSeq.flatMap { f =>
-        Seq(min(col(f.name)).cast(StringType).as(s"__min_${f.name}"),
-          max(col(f.name)).cast(StringType).as(s"__max_${f.name}"),
-          sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"))
-      }
+    (schema.fields.toSeq.filter(f => statSupported(f.dataType) && indexed(f.name)), applyPolicy)
+  }
+
+  /** Per-file stats of parquet files that ALREADY exist — CONVERT's
+    * linked files, ANALYZE's live set — given relative to `dir`: one
+    * distributed pass, row count and per-column min/max/null-count in
+    * stats canon, keyed by `_metadata.file_path`. Staging writes never
+    * come here: [[writeStaged]] collects the same stats inside the
+    * write. A zero-row file has no entry. Collect is bounded: files ×
+    * columns. */
+  private def readFileStats(spark: SparkSession, dir: String, rels: Seq[String],
+      schema: StructType, fields: Seq[StructField],
+      applyPolicy: (String, ColStats) => ColStats): Map[String, (Long, Map[String, ColStats])] = {
+    // Schema pinned by the caller: no footer inference.
+    val df = spark.read.schema(schema).parquet(rels.map(r => Paths.get(dir, r).toString): _*)
+    val aggs: Seq[Column] = count(lit(1)).as("__rows") +: fields.flatMap { f =>
+      Seq(min(col(f.name)).cast(StringType).as(s"__min_${f.name}"),
+        max(col(f.name)).cast(StringType).as(s"__max_${f.name}"),
+        sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"))
+    }
     val rows = df.groupBy(col("_metadata.file_path").as("__path"))
       .agg(aggs.head, aggs.tail: _*).collect()
-    names.map { n =>
-      val rel = s"$sub/$n"
-      // A zero-row staged file (empty-DataFrame write) has no stats row.
-      rows.find(r => r.getString(0).endsWith(rel)) match {
-        case Some(r) =>
-          val stats = fields.map { f =>
+    // `_metadata.file_path` is a URI; key by the scheme-stripped
+    // absolute path so the per-file lookup is O(1), not an endsWith
+    // scan per file.
+    val rowByAbs = rows.map(r => r.getString(0).stripPrefix("file:") -> r).toMap
+    rels.flatMap { rel =>
+      rowByAbs.get(Paths.get(dir, rel).toAbsolutePath.toString)
+        .orElse(rows.find(_.getString(0).endsWith(rel))).map { r =>
+          rel -> ((r.getAs[Long]("__rows"), fields.map { f =>
             f.name -> applyPolicy(f.name, ColStats(f.dataType.simpleString,
               Option(r.getAs[String](s"__min_${f.name}")),
               Option(r.getAs[String](s"__max_${f.name}")),
               r.getAs[Long](s"__nulls_${f.name}")))
-          }.toMap
-          AddFile(rel, r.getAs[Long]("__rows"), Files.size(Paths.get(dir, rel)), stats)
-        case None =>
-          AddFile(rel, 0L, Files.size(Paths.get(dir, rel)),
-            fields.map(f => f.name -> ColStats(f.dataType.simpleString, None, None, 0L)).toMap)
-      }
+          }.toMap))
+        }
+    }.toMap
+  }
+
+  /** [[AddFile]]s for the existing files of `dir/sub` (CONVERT), stats
+    * by [[readFileStats]] under the table head's policy. Also the oracle
+    * the in-write staging stats are held equal to. */
+  private[graft] def collectAdds(spark: SparkSession, dir: String, sub: String,
+      schema: StructType): Seq[AddFile] = {
+    val rels = listStaged(dir, sub).map(n => s"$sub/$n")
+    if (rels.isEmpty) return Nil
+    val (fields, applyPolicy) = stagedStatsPolicy(dir, schema)
+    val byRel = readFileStats(spark, dir, rels, schema, fields, applyPolicy)
+    val empty = fields.map(f => f.name -> ColStats(f.dataType.simpleString, None, None, 0L)).toMap
+    rels.map { rel =>
+      val (rows, stats) = byRel.getOrElse(rel, (0L, empty))
+      AddFile(rel, rows, Files.size(Paths.get(dir, rel)), stats)
     }
   }
 
-  private def stage(spark: SparkSession, dir: String, df: DataFrame): (String, Seq[AddFile]) = {
+  /** Write `df` (hive-partitioned by `partCols` when non-empty) under
+    * the new staging directory `dir/sub`, collecting each file's
+    * [[AddFile]] stats in the same pass ([[StagedWrite]]) — no second
+    * scan of the staged files. The stats equal what [[collectAdds]]
+    * derives by re-reading them. Keyed by path relative to the staging
+    * root; `bytes` is the written file's size. */
+  private def writeStaged(dir: String, sub: String, df: DataFrame, partCols: Seq[String])
+      : Map[String, AddFile] = {
+    val dataSchema = StructType(df.schema.fields.filterNot(f => partCols.contains(f.name)))
+    val (fields, applyPolicy) = stagedStatsPolicy(dir, dataSchema)
+    val root = Paths.get(dir, sub)
+    StagedWrite.write(df, root.toString, partCols, fields.map(_.name)).map { case (rel, fs) =>
+      val stats = fields.zip(fs.cols).map { case (f, (lo, hi, nulls)) =>
+        f.name -> applyPolicy(f.name, ColStats(f.dataType.simpleString, lo, hi, nulls))
+      }.toMap
+      rel -> AddFile(s"$sub/$rel", fs.rows, Files.size(root.resolve(rel)), stats)
+    }
+  }
+
+  /** Stage `df` as parquet files under a fresh `d-xxxx` directory and
+    * return their [[AddFile]]s, stats collected in-write
+    * ([[writeStaged]]). */
+  private[graft] def stage(spark: SparkSession, dir: String, df: DataFrame): (String, Seq[AddFile]) = {
     val sub = s"d-${UUID.randomUUID().toString.take(8)}"
-    df.write.parquet(Paths.get(dir, sub).toString)
-    (sub, collectAdds(spark, dir, sub, df.schema))
+    val adds = writeStaged(dir, sub, df, Nil)
+    (sub, listStaged(dir, sub).map(adds))
   }
 
   /** [[BloomIndex]] build aggregate: the [[graft.functions.BloomOps]]
@@ -2932,11 +2945,11 @@ object TxLog {
     * combination to exactly one task, the hive-style layout is
     * flattened back to the two-component `d-xxxx/file.parquet` form
     * every path invariant relies on (file moves are metadata-only), and
-    * pv derives from the per-file STATS the commit collects anyway —
+    * pv derives from the per-file STATS the write collects anyway —
     * min==max is guaranteed by the aligned write, and stats canon keeps
     * pv comparable with every other pruning string. NULL partition
     * values are rejected after staging (zero extra passes over `df`). */
-  private def stagePartitioned(spark: SparkSession, dir: String, df: DataFrame,
+  private[graft] def stagePartitioned(spark: SparkSession, dir: String, df: DataFrame,
       physPartCols: Seq[String]): (String, Seq[AddFile]) = {
     physPartCols.foreach { c =>
       val f = df.schema.fields.find(_.name == c).getOrElse(
@@ -2949,11 +2962,14 @@ object TxLog {
     val sub = s"d-${UUID.randomUUID().toString.take(8)}"
     val stagingDir = Paths.get(dir, sub)
     val dup = physPartCols.map(c => c -> s"__pb_$c")
-    dup.foldLeft(df) { case (d, (c, p)) => d.withColumn(p, col(c)) }
-      .repartition(physPartCols.map(col): _*)
-      .write.partitionBy(dup.map(_._2): _*).parquet(stagingDir.toString)
-    flattenStaged(stagingDir)
-    val adds = collectAdds(spark, dir, sub, df.schema)
+    val written = writeStaged(dir, sub,
+      dup.foldLeft(df) { case (d, (c, p)) => d.withColumn(p, col(c)) }
+        .repartition(physPartCols.map(col): _*),
+      dup.map(_._2))
+    val moved = flattenStaged(stagingDir)
+    val adds = listStaged(dir, sub).map { n =>
+      written(moved(n)).copy(path = s"$sub/$n")
+    }
     try {
       (sub, adds.map { a =>
         val pv = physPartCols.map { c =>
@@ -2986,8 +3002,9 @@ object TxLog {
   }
 
   /** Move the leaves of a hive-style `col=val/...` staging layout up to
-    * the staging root under unique names, then drop the value dirs. */
-  private def flattenStaged(stagingDir: Path): Unit = {
+    * the staging root under unique names, then drop the value dirs.
+    * Returns new name -> the leaf's former path relative to the root. */
+  private def flattenStaged(stagingDir: Path): Map[String, String] = {
     def leaves(p: Path): Seq[Path] = {
       val s = Files.list(p)
       try s.iterator().asScala.toList.sortBy(_.toString).flatMap { f =>
@@ -3001,12 +3018,10 @@ object TxLog {
       try s.iterator().asScala.filter(Files.isDirectory(_)).toList.sortBy(_.toString)
       finally s.close()
     }
-    var i = 0
-    subdirs.foreach { d =>
-      leaves(d).foreach { f =>
-        Files.move(f, stagingDir.resolve(f"p$i%05d-${f.getFileName}")): Unit
-        i += 1
-      }
+    val moved = subdirs.flatMap(leaves).zipWithIndex.map { case (f, i) =>
+      val name = f"p$i%05d-${f.getFileName}"
+      Files.move(f, stagingDir.resolve(name))
+      name -> stagingDir.relativize(f).toString
     }
     subdirs.foreach { d =>
       val walk = Files.walk(d)
@@ -3014,6 +3029,7 @@ object TxLog {
         .forEach(f => Files.deleteIfExists(f): Unit)
       finally walk.close()
     }
+    moved.toMap
   }
 
   private def deleteStaged(dir: String, sub: String): Unit = {
@@ -7345,11 +7361,13 @@ object TxLog {
       keyCols: Seq[String]): KeyCensus = {
     val cap = mergeInListMax.toInt + 1
     val m = keyCols.length
-    val grouped = staged.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__c"))
-      .select(keyCols.map(col) ++
-        keyCols.map(k => col(k).cast(StringType).as(s"__canon_$k")) :+
-        col("__c"): _*)
+    // positional names only (k<i>, n, s<i>): no key column name can
+    // collide with the count or canon columns
+    val ks = (0 until m).map(i => col(s"k$i"))
+    val grouped = staged.select(keyCols.zipWithIndex.map { case (k, i) => col(k).as(s"k$i") }: _*)
+      .groupBy(ks: _*).agg(count(lit(1)).as("n"))
+      .select(ks ++ ks.zipWithIndex.map { case (k, i) => k.cast(StringType).as(s"s$i") } :+
+        col("n"): _*)
     // (rows, nonNullGroups, nullRows, values⊆cap, canons⊆cap, overflow,
     //  sawNullCanon) per output partition — fixed-size driver payload
     val parts = grouped.rdd.mapPartitions { it =>

@@ -27,29 +27,40 @@ object StreamingOps {
     * is right-sized to the streamed input instead of inheriting the
     * batch session's core-count default: ceil(inputBytes /
     * maxPartitionBytes), clamped to [1, the parent session's shuffle
-    * partitions] (guide §5). The bound is derived from DATA SIZE, so it
-    * grows with the declared SF and never encodes the local core
+    * partitions] (guide §5). Input bytes come from the Hadoop
+    * filesystem of each path (`getContentSummary`: recursive, any
+    * scheme); a probe that finds no bytes keeps the parent's count
+    * rather than guessing low. The bound is derived from DATA SIZE, so
+    * it grows with the declared SF and never encodes the local core
     * count; the parent's setting stays the ceiling, so a cluster-sized
-    * configuration is respected. Legitimate ONLY for per-run-fresh
+    * configuration is respected. The child session starts from the
+    * parent's runtime SQL settings. Legitimate ONLY for per-run-fresh
     * checkpoints (every caller here checkpoints into a
     * Scratch.dir temp directory): a persistent checkpoint pins its
     * state-store count at first run and must never be re-sized —
     * [[windowedEventCountsAppend]] takes a caller-owned checkpoint and
     * deliberately does NOT use this. */
-  private def sizedStreamSession(spark: SparkSession,
+  private[graft] def sizedStreamSession(spark: SparkSession,
       inputDirs: Seq[String]): SparkSession = {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
     val bytes = inputDirs.map { d =>
-      val f = new java.io.File(d)
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.map(_.length()).sum).getOrElse(0L)
-      else f.length()
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(hadoopConf)
+      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     }.sum
     val maxPart = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     val parent = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val n = math.max(1L,
-      math.min(parent.toLong, (bytes + maxPart - 1) / maxPart)).toInt
+    val n =
+      if (bytes <= 0L) parent
+      else math.max(1L, math.min(parent.toLong, (bytes + maxPart - 1) / maxPart)).toInt
     val ss = spark.newSession()
+    // static and core settings are shared through the SparkContext, so
+    // only the parent's runtime settings differ here
+    val inherited = ss.conf.getAll
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (!inherited.get(k).contains(v)) ss.conf.set(k, v)
+    }
     ss.conf.set("spark.sql.shuffle.partitions", n)
     ss
   }

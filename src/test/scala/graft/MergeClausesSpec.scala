@@ -583,4 +583,23 @@ class MergeClausesSpec extends AnyFunSuite with SparkTestBase {
     assert(state(dir)(3L) === (("v3", 30.0)))
     assert(!TxLog.snapshot(dir).props.contains(TxLog.DeletionVectors.Enabled))
   }
+
+  test("key columns named like the key census' internal columns merge correctly") {
+    import spark.implicits._
+    // single key literally named `__c`, then a composite key whose
+    // second column is `__canon___c`: both were once census column names
+    val dir = fresh("census-names")
+    TxLog.append(spark, dir, (0 until 10).map(i => (i.toLong, s"v$i")).toDF("__c", "v"))
+    TxLog.merge(spark, dir, Seq((3L, "U3"), (42L, "N42")).toDF("__c", "v"), "__c")
+    val byKey = TxLog.read(spark, dir).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(byKey.size === 11 && byKey(3L) === "U3" && byKey(42L) === "N42" && byKey(4L) === "v4")
+
+    val dir2 = fresh("census-names2")
+    TxLog.append(spark, dir2,
+      (0 until 6).map(i => (i.toLong, i % 2, s"v$i")).toDF("__c", "__canon___c", "v"))
+    TxLog.merge(spark, dir2, Seq((1L, 1, "U1"), (7L, 0, "N7")).toDF("__c", "__canon___c", "v"),
+      Seq("__c", "__canon___c"))
+    val rows = TxLog.read(spark, dir2).collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getString(2)).toMap
+    assert(rows.size === 7 && rows((1L, 1)) === "U1" && rows((7L, 0)) === "N7")
+  }
 }

@@ -102,4 +102,25 @@ class PipelineGraphSpec extends AnyFunSuite with SparkTestBase {
     assert(!new java.io.File(s"$work/v").exists())
     assert(res("v").agg(sum("y")).head().getLong(0) === 6L)
   }
+
+  test("transactional DAG: drop and warn expectation counts stay exact") {
+    val n = 600
+    val work = graft.Scratch.dir("graft-graph-tx").toString
+    val bronze = PimaFixture.bronze(spark, n)
+    val defs = DiabetesPipeline.tableDefs(spark, RunContext.golden, _ => bronze)
+    val res = PipelineGraph.run(spark, defs, work, transactionalSinks = true)
+    val byExp = res.expectations.map(e => (e.table, e.expectation) -> e).toMap
+    val badFile = (0 until n).count(i => PimaFixture.badFile(i.toLong)).toLong
+    val badAge = (0 until n).count(i => PimaFixture.badAge(i.toLong) &&
+      !PimaFixture.badFile(i.toLong)).toLong
+    val file = byExp(("diabetes_bronze", "valid_file"))
+    assert((file.mode, file.passedCount, file.failedCount) === (("drop", n - badFile, badFile)))
+    val age = byExp(("diabetes_silver", "valid_age"))
+    assert((age.mode, age.passedCount, age.failedCount) === (("warn", n - badFile - badAge, badAge)))
+    // drop removed the bad-file rows from the committed table; warn kept
+    // the bad-age rows downstream
+    assert(res("diabetes_bronze").count() === n - badFile)
+    assert(res("diabetes_silver").where("Age = 0").count() === badAge)
+    assert(res.expectations.size === 4)
+  }
 }
