@@ -108,18 +108,14 @@ object TxDmlStrategy extends SparkStrategy {
         val srcOut = m.sourceTable.outputSet
         (m.matchedActions, m.notMatchedActions, m.notMatchedBySourceActions) match {
           // upsert: UPDATE SET * + INSERT * (star actions arrive from
-          // analysis as full identity assignment lists); composite keys
-          // route through mergeClauses' star clauses — same semantics
+          // analysis as full identity assignment lists), single or
+          // composite key
           case (Seq(up: UpdateAction), Seq(ins: InsertAction), Seq())
               if up.condition.isEmpty && ins.condition.isEmpty &&
                 isIdentity(up.assignments, srcOut, t) &&
                 isIdentity(ins.assignments, srcOut, t) =>
             TxDmlExec(s"MERGE UPSERT ${t.txDir}", () =>
-              if (keyCols.size == 1)
-                TxLog.merge(spark, t.txDir,
-                  alignToTable(source, t.txDir), keyCols.head)
-              else TxLog.merge(spark, t.txDir,
-                alignToTable(source, t.txDir), keyCols)) :: Nil
+              TxLog.merge(spark, t.txDir, alignToTable(source, t.txDir), keyCols)) :: Nil
           // bulk erasure: WHEN MATCHED THEN DELETE, nothing else
           case (Seq(del: DeleteAction), Seq(), Seq())
               if del.condition.isEmpty && keyCols.size == 1 =>
@@ -297,8 +293,9 @@ object TxDmlStrategy extends SparkStrategy {
     * unmentioned columns with `target.c := target.c`, which name
     * equality alone cannot distinguish from a star (treating it as one
     * would overwrite the unmentioned columns with source values). A
-    * Cast in the value means the source schema diverges — TxLog.merge
-    * would reject it anyway; refuse structurally here. */
+    * Cast in the value means a source column's type differs from the
+    * table's, which TxLog.merge's exact schema check refuses — so such
+    * a MERGE is not an upsert and takes the clause route, which casts. */
   private def isIdentity(assignments: Seq[Assignment],
       sourceOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
       t: TxTable): Boolean = {
@@ -311,9 +308,10 @@ object TxDmlStrategy extends SparkStrategy {
   }
 
   /** The analyzed source plan's column ORDER may differ from the table's
-    * (MERGE resolves by name); TxLog.merge checks schema positionally —
-    * reorder by name, which also drops nothing (isIdentity proved the
-    * name sets align). */
+    * (MERGE resolves by name), while TxLog.merge requires exactly the
+    * table's columns in the table's order — reorder by name, which also
+    * drops the source columns the table lacks (isIdentity proved every
+    * table column has its like-named source column). */
   private def alignToTable(source: org.apache.spark.sql.DataFrame,
       dir: String): org.apache.spark.sql.DataFrame = {
     val cols = TxLog.snapshot(dir).schema.fieldNames

@@ -795,7 +795,7 @@ object TxCatalog {
     val masked = {
       val base = rel(withDv = true)
         .withColumn("__gfi", col("_metadata.row_index"))
-        .withColumn("__gfp", expr("substring_index(_metadata.file_path, '/', -2)"))
+        .withColumn("__gfp", TxLog.relPathCol)
       val keep = !coalesce(
         array_contains(element_at(typedLit(deadMap), col("__gfp")), col("__gfi")),
         lit(false))

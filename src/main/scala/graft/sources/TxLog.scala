@@ -773,10 +773,31 @@ object TxLog {
     sub
   }
 
-  /** `_metadata.file_path` reduced to the AddFile-relative form — every
-    * staged path is exactly two components (`d-xxxx/part-*.parquet`). */
-  private def relPathCol: Column =
-    expr("substring_index(_metadata.file_path, '/', -2)")
+  /** A `_metadata.file_path` value reduced to the AddFile-relative form:
+    * every data file's path is exactly two components
+    * (`d-xxxx/part-*.parquet`), and the file path is a URI while
+    * [[AddFile.path]] is not, so the URI escapes are decoded (the file
+    * path spells a CONVERTed `my data%1.parquet` `my%20data%251.parquet`).
+    * Every comparison of scanned paths with AddFile paths goes through
+    * here. A path without `%` has no escapes, so only escaped names pay
+    * the decoding call. */
+  private[sources] def relPath(filePath: Column): Column = {
+    val raw = substring_index(filePath, "/", -2)
+    when(instr(raw, "%") > 0, uriPathDecode(raw)).otherwise(raw)
+  }
+
+  private val uriPathDecode = udf((raw: String) => new java.net.URI(raw).getPath)
+
+  private[sources] def relPathCol: Column = relPath(col("_metadata.file_path"))
+
+  /** The `candidates` holding at least one row of `matched` (a
+    * [[scanFiles]] frame tagged `__p`): one distinct-path collect,
+    * decoded after the distinct. */
+  private def touchedFiles(matched: DataFrame, candidates: Seq[AddFile]): Seq[AddFile] = {
+    val paths = matched.select("__p").distinct().select(relPath(col("__p")))
+      .collect().map(_.getString(0)).toSet
+    candidates.filter(f => paths.contains(f.path))
+  }
 
   /** Scan `files` under PHYSICAL names, rename to the LOGICAL schema;
     * `tagPath` optionally appends `_metadata.file_path` (captured BEFORE
@@ -1528,6 +1549,104 @@ object TxLog {
     TxCatalog.invalidateDeadMaps(dir)
   }
 
+  /** The metadata fold both log replays ([[snapshot]],
+    * [[snapshotMeta]]) share — schema, txn high-water marks, properties,
+    * protocol and table features; each replay keeps its own file
+    * bookkeeping. Feed it the checkpoint manifest (if any), then every
+    * later commit in order. */
+  private final class LogReplay(dir: String) {
+    private var schemaDdl: Option[String] = None
+    val txns = scala.collection.mutable.Map[String, Long]()
+    val props = scala.collection.mutable.Map[String, String]()
+    var protocol = 1L
+    val features = scala.collection.mutable.Set[String]()
+    val wfeatures = scala.collection.mutable.Set[String]()
+
+    def schema: String = schemaDdl.getOrElse(sys.error(s"$dir: no schema in log"))
+
+    def checkpoint(j: JValue): Unit = {
+      checkProtocol(j)
+      schemaDdl = Some(jStr(j \ "schema"))
+      (j \ "txns") match {
+        case JObject(fields) => fields.foreach { case (app, b) => txns(app) = jLong(b) }
+        case _ =>
+      }
+      mergeProps(j, isCkptManifest = true)
+    }
+
+    def commit(j: JValue): Unit = {
+      checkProtocol(j)
+      jStrOpt(j \ "schema").foreach(s => schemaDdl = Some(s))
+      (j \ "txn") match {
+        case JObject(_) =>
+          val app = jStr(j \ "txn" \ "app"); val b = jLong(j \ "txn" \ "batch")
+          txns(app) = math.max(txns.getOrElse(app, Long.MinValue), b)
+        case _ =>
+      }
+      mergeProps(j)
+    }
+
+    private def mergeProps(j: JValue, isCkptManifest: Boolean = false): Unit =
+      (j \ "props") match {
+        case JObject(fields) =>
+          fields.foreach { case (k, v) => props(k) = jStr(v) }
+          // DROP FEATURE is positional: subtract the named features from
+          // what replay accumulated SO FAR (a later re-enable re-stamps);
+          // the table's legacy int re-derives from what remains. The
+          // subtraction applies ONLY to delta commits — a checkpoint
+          // manifest's features/wfeatures lists already state the net
+          // post-drop set, while its cumulative props still carry the
+          // marker; subtracting there would strip a feature that was
+          // re-enabled after the drop from every post-checkpoint replay
+          if (!isCkptManifest) (j \ "props" \ DroppedFeatures.Key) match {
+            case org.json4s.JString(s) =>
+              val ds = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
+              features --= ds; wfeatures --= ds
+              protocol = (features.map(featureInt) + 1L).max
+            case _ =>
+          }
+        case _ =>
+      }
+
+    private def checkProtocol(j: JValue): Unit = {
+      ((j \ "protocol") match {
+        case JInt(p) => Some(p.toLong)
+        case JLong(p) => Some(p)
+        case _ => None // pre-versioning log: protocol 1
+      }).foreach { p =>
+        if (p > protocolVersion)
+          throw new UnsupportedProtocolException(
+            s"$dir was written under log protocol $p; this reader supports " +
+              s"up to $protocolVersion — refusing rather than misreading newer actions")
+        protocol = math.max(protocol, p)
+        // the int's cumulative implication applies only to LEGACY
+        // commits: a commit naming its features is authoritative —
+        // un-over-requiring readers is the point of the list
+        if ((j \ "features") == org.json4s.JNothing)
+          features ++= impliedFeatures(p)
+      }
+      // table features (§5): refuse BY NAME anything outside this
+      // reader's capability set — misreading is the one forbidden mode
+      (j \ "features") match {
+        case JArray(fs) => fs.foreach { f =>
+          val name = jStr(f)
+          if (!readerCapabilities.contains(name))
+            throw new UnsupportedProtocolException(
+              s"$dir requires table feature '$name', which this reader " +
+                "does not support — refusing rather than misreading its actions")
+          features += name
+        }
+        case _ =>
+      }
+      // writer features accumulate WITHOUT refusing: a reader never
+      // needs writer capabilities — the gate fires only on mutation
+      (j \ "wfeatures") match {
+        case JArray(fs) => fs.foreach(f => wfeatures += jStr(f))
+        case _ =>
+      }
+    }
+  }
+
   /** Reconstruct the table state at `versionAsOf` (default: latest).
     * Replays from the newest checkpoint at or below the target — O(
     * checkpointInterval) commit files regardless of table age. The
@@ -1551,82 +1670,11 @@ object TxLog {
     // newest — a stale pointer (cleanup race) only costs replay length
     val fromCkpt = (readLastCheckpoint(dir).filter(_ <= target).toSeq ++
       ckpts.filter(_ <= target)).maxOption
-    var schemaDdl: Option[String] = None
+    val r = new LogReplay(dir)
     val live = scala.collection.mutable.LinkedHashMap[String, AddFile]()
-    val txns = scala.collection.mutable.Map[String, Long]()
-    val props = scala.collection.mutable.Map[String, String]()
-
-    def mergeTxn(j: JValue): Unit = (j \ "txn") match {
-      case JObject(_) =>
-        val app = jStr(j \ "txn" \ "app"); val b = jLong(j \ "txn" \ "batch")
-        txns(app) = math.max(txns.getOrElse(app, Long.MinValue), b)
-      case _ =>
-    }
-    var tableProtocol = 1L
-    val tableFeatures = scala.collection.mutable.Set[String]()
-    val tableWFeatures = scala.collection.mutable.Set[String]()
-    def mergeProps(j: JValue, isCkptManifest: Boolean = false): Unit =
-      (j \ "props") match {
-        case JObject(fields) =>
-          fields.foreach { case (k, v) => props(k) = jStr(v) }
-          // DROP FEATURE is positional: subtract the named features from
-          // what replay accumulated SO FAR (a later re-enable re-stamps);
-          // the table's legacy int re-derives from what remains. The
-          // subtraction applies ONLY to delta commits — a checkpoint
-          // manifest's features/wfeatures lists already state the net
-          // post-drop set, while its cumulative props still carry the
-          // marker; subtracting there would strip a feature that was
-          // re-enabled after the drop from every post-checkpoint replay
-          if (!isCkptManifest) (j \ "props" \ DroppedFeatures.Key) match {
-            case org.json4s.JString(s) =>
-              val ds = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
-              tableFeatures --= ds; tableWFeatures --= ds
-              tableProtocol = (tableFeatures.map(featureInt) + 1L).max
-            case _ =>
-          }
-        case _ =>
-      }
-    def checkProtocol(j: JValue): Unit = {
-      ((j \ "protocol") match {
-        case JInt(p) => Some(p.toLong)
-        case JLong(p) => Some(p)
-        case _ => None // pre-versioning log: protocol 1
-      }).foreach { p =>
-        if (p > protocolVersion)
-          throw new UnsupportedProtocolException(
-            s"$dir was written under log protocol $p; this reader supports " +
-              s"up to $protocolVersion — refusing rather than misreading newer actions")
-        tableProtocol = math.max(tableProtocol, p)
-        // the int's cumulative implication applies only to LEGACY
-        // commits: a commit naming its features is authoritative —
-        // un-over-requiring readers is the point of the list
-        if ((j \ "features") == org.json4s.JNothing)
-          tableFeatures ++= impliedFeatures(p)
-      }
-      // table features (§5): refuse BY NAME anything outside this
-      // reader's capability set — misreading is the one forbidden mode
-      (j \ "features") match {
-        case JArray(fs) => fs.foreach { f =>
-          val name = jStr(f)
-          if (!readerCapabilities.contains(name))
-            throw new UnsupportedProtocolException(
-              s"$dir requires table feature '$name', which this reader " +
-                "does not support — refusing rather than misreading its actions")
-          tableFeatures += name
-        }
-        case _ =>
-      }
-      // writer features accumulate WITHOUT refusing: a reader never
-      // needs writer capabilities — the gate fires only on mutation
-      (j \ "wfeatures") match {
-        case JArray(fs) => fs.foreach(f => tableWFeatures += jStr(f))
-        case _ =>
-      }
-    }
     fromCkpt.foreach { cv =>
       val j = parse(Files.readString(ckptFile(dir, cv)))
-      checkProtocol(j)
-      schemaDdl = Some(jStr(j \ "schema"))
+      r.checkpoint(j)
       val nParts = (j \ "parts") match {
         case JInt(x) => x.toInt
         case JLong(x) => x.toInt
@@ -1657,28 +1705,19 @@ object TxLog {
           }
         } finally br.close()
       }
-      (j \ "txns") match {
-        case JObject(fields) => fields.foreach { case (app, b) => txns(app) = jLong(b) }
-        case _ =>
-      }
-      mergeProps(j, isCkptManifest = true)
     }
     val replayFrom = fromCkpt.map(_ + 1).getOrElse(0L)
     (replayFrom to target).foreach { v =>
       val j = parse(Files.readString(versionFile(dir, v)))
-      checkProtocol(j)
-      jStrOpt(j \ "schema").foreach(s => schemaDdl = Some(s))
+      r.commit(j)
       parseAdds(j \ "adds").foreach(a => live(a.path) = a)
       (j \ "removes") match {
-        case JArray(rs) => rs.foreach(r => live.remove(jStr(r)))
+        case JArray(rs) => rs.foreach(p => live.remove(jStr(p)))
         case _ =>
       }
-      mergeTxn(j)
-      mergeProps(j)
     }
-    val snap = Snapshot(target, schemaDdl.getOrElse(sys.error(s"$dir: no schema in log")),
-      live.values.toSeq, txns.toMap, props.toMap, tableProtocol,
-      tableFeatures.toSet, tableWFeatures.toSet)
+    val snap = Snapshot(target, r.schema, live.values.toSeq, r.txns.toMap,
+      r.props.toMap, r.protocol, r.features.toSet, r.wfeatures.toSet)
     snapCache.synchronized(snapCache.put((dir, target), snap))
     snap
   }
@@ -2058,71 +2097,14 @@ object TxLog {
     }
     val fromCkpt = (readLastCheckpoint(dir).filter(_ <= target).toSeq ++
       ckpts.filter(_ <= target)).maxOption
-    var schemaDdl: Option[String] = None
-    val txns = scala.collection.mutable.Map[String, Long]()
-    val props = scala.collection.mutable.Map[String, String]()
-    var tableProtocol = 1L
-    val tableFeatures = scala.collection.mutable.Set[String]()
-    val tableWFeatures = scala.collection.mutable.Set[String]()
-    def checkProtocol(j: JValue): Unit = {
-      ((j \ "protocol") match {
-        case JInt(p) => Some(p.toLong)
-        case JLong(p) => Some(p)
-        case _ => None
-      }).foreach { p =>
-        if (p > protocolVersion)
-          throw new UnsupportedProtocolException(
-            s"$dir was written under log protocol $p; this reader supports " +
-              s"up to $protocolVersion — refusing rather than misreading newer actions")
-        tableProtocol = math.max(tableProtocol, p)
-        // the int's cumulative implication applies only to LEGACY
-        // commits: a commit naming its features is authoritative —
-        // un-over-requiring readers is the point of the list
-        if ((j \ "features") == org.json4s.JNothing)
-          tableFeatures ++= impliedFeatures(p)
-      }
-      (j \ "features") match {
-        case JArray(fs) => fs.foreach { f =>
-          val name = jStr(f)
-          if (!readerCapabilities.contains(name))
-            throw new UnsupportedProtocolException(
-              s"$dir requires table feature '$name', which this reader " +
-                "does not support — refusing rather than misreading its actions")
-          tableFeatures += name
-        }
-        case _ =>
-      }
-      (j \ "wfeatures") match {
-        case JArray(fs) => fs.foreach(f => tableWFeatures += jStr(f))
-        case _ =>
-      }
-    }
-    def mergeProps(j: JValue, isCkptManifest: Boolean = false): Unit =
-      (j \ "props") match {
-        case JObject(fields) =>
-          fields.foreach { case (k, v) => props(k) = jStr(v) }
-          // positional DROP FEATURE subtraction — same delta-commits-only
-          // rule as [[snapshot]]: a checkpoint manifest's feature lists
-          // are already net-of-drops and its cumulative props carry the
-          // marker forever, so subtracting there would strip a
-          // re-enabled feature on every post-checkpoint replay
-          if (!isCkptManifest) (j \ "props" \ DroppedFeatures.Key) match {
-            case org.json4s.JString(s) =>
-              val ds = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
-              tableFeatures --= ds; tableWFeatures --= ds
-              tableProtocol = (tableFeatures.map(featureInt) + 1L).max
-            case _ =>
-          }
-        case _ =>
-      }
+    val r = new LogReplay(dir)
     var base: Option[(Long, Int)] = None
     var baseParquet = false
     val adds = scala.collection.mutable.LinkedHashMap[String, AddFile]()
     val removed = scala.collection.mutable.Set[String]()
     fromCkpt.foreach { cv =>
       val j = parse(Files.readString(ckptFile(dir, cv)))
-      checkProtocol(j)
-      schemaDdl = Some(jStr(j \ "schema"))
+      r.checkpoint(j)
       val nParts = (j \ "parts") match {
         case JInt(x) => x.toInt
         case JLong(x) => x.toInt
@@ -2135,17 +2117,11 @@ object TxLog {
         base = Some((cv, nParts))
         baseParquet = jStrOpt(j \ "pformat").contains("parquet")
       }
-      (j \ "txns") match {
-        case JObject(fields) => fields.foreach { case (app, b) => txns(app) = jLong(b) }
-        case _ =>
-      }
-      mergeProps(j, isCkptManifest = true)
     }
     val replayFrom = fromCkpt.map(_ + 1).getOrElse(0L)
     (replayFrom to target).foreach { v =>
       val j = parse(Files.readString(versionFile(dir, v)))
-      checkProtocol(j)
-      jStrOpt(j \ "schema").foreach(s => schemaDdl = Some(s))
+      r.commit(j)
       parseAdds(j \ "adds").foreach { a =>
         adds(a.path) = a; removed -= a.path // a re-add revives the path
       }
@@ -2155,19 +2131,10 @@ object TxLog {
         }
         case _ =>
       }
-      (j \ "txn") match {
-        case JObject(_) =>
-          val app = jStr(j \ "txn" \ "app"); val b = jLong(j \ "txn" \ "batch")
-          txns(app) = math.max(txns.getOrElse(app, Long.MinValue), b)
-        case _ =>
-      }
-      mergeProps(j)
     }
-    val out = SnapshotMeta(target,
-      schemaDdl.getOrElse(sys.error(s"$dir: no schema in log")),
-      txns.toMap, props.toMap, tableProtocol,
-      base, adds.values.toSeq, removed.toSet, tableFeatures.toSet,
-      baseParquet, tableWFeatures.toSet)
+    val out = SnapshotMeta(target, r.schema, r.txns.toMap, r.props.toMap,
+      r.protocol, base, adds.values.toSeq, removed.toSet, r.features.toSet,
+      baseParquet, r.wfeatures.toSet)
     snapMetaCache.synchronized(snapMetaCache.put((dir, target), out)): Unit
     out
   }
@@ -2767,7 +2734,7 @@ object TxLog {
   /** Per-file stats of parquet files that ALREADY exist — CONVERT's
     * linked files, ANALYZE's live set — given relative to `dir`: one
     * distributed pass, row count and per-column min/max/null-count in
-    * stats canon, keyed by `_metadata.file_path`. Staging writes never
+    * stats canon, keyed by relative path ([[relPath]]). Staging writes never
     * come here: [[writeStaged]] collects the same stats inside the
     * write. A zero-row file has no entry. Collect is bounded: files ×
     * columns. */
@@ -2781,22 +2748,18 @@ object TxLog {
         max(col(f.name)).cast(StringType).as(s"__max_${f.name}"),
         sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"))
     }
-    val rows = df.groupBy(col("_metadata.file_path").as("__path"))
+    val rows = df.groupBy(relPathCol.as("__path"))
       .agg(aggs.head, aggs.tail: _*).collect()
-    // `_metadata.file_path` is a URI; key by the scheme-stripped
-    // absolute path so the per-file lookup is O(1), not an endsWith
-    // scan per file.
-    val rowByAbs = rows.map(r => r.getString(0).stripPrefix("file:") -> r).toMap
+    val rowByRel = rows.map(r => r.getString(0) -> r).toMap
     rels.flatMap { rel =>
-      rowByAbs.get(Paths.get(dir, rel).toAbsolutePath.toString)
-        .orElse(rows.find(_.getString(0).endsWith(rel))).map { r =>
-          rel -> ((r.getAs[Long]("__rows"), fields.map { f =>
-            f.name -> applyPolicy(f.name, ColStats(f.dataType.simpleString,
-              Option(r.getAs[String](s"__min_${f.name}")),
-              Option(r.getAs[String](s"__max_${f.name}")),
-              r.getAs[Long](s"__nulls_${f.name}")))
-          }.toMap))
-        }
+      rowByRel.get(rel).map { r =>
+        rel -> ((r.getAs[Long]("__rows"), fields.map { f =>
+          f.name -> applyPolicy(f.name, ColStats(f.dataType.simpleString,
+            Option(r.getAs[String](s"__min_${f.name}")),
+            Option(r.getAs[String](s"__max_${f.name}")),
+            r.getAs[Long](s"__nulls_${f.name}")))
+        }.toMap))
+      }
     }.toMap
   }
 
@@ -2900,12 +2863,11 @@ object TxLog {
       // re-rendered under the column type hash identically
       val aggs = present.map(c => agg(xxhash64(col(c).cast(StringType))).as(s"__b_$c"))
       val rows = staged
-        .groupBy(col("_metadata.file_path").as("__path"))
+        .groupBy(relPathCol.as("__path"))
         .agg(aggs.head, aggs.tail: _*).collect()
-      val stagedNames = listStaged(dir, sub).map(n => s"$sub/$n")
+      val stagedNames = listStaged(dir, sub).map(n => s"$sub/$n").toSet
       rows.foreach { r =>
-        val abs = r.getString(0)
-        stagedNames.find(abs.endsWith).foreach { rel =>
+        Some(r.getString(0)).filter(stagedNames).foreach { rel =>
           present.zipWithIndex.foreach { case (c, i) =>
             val p = bloomPath(dir, rel, c)
             Files.createDirectories(p.getParent)
@@ -3828,10 +3790,7 @@ object TxLog {
           val tagged = scanFiles(spark, dir, snap, candidates, tagPath = Some("__p"))
           val matched = tagged.where(coalesce(expr(condition), lit(false)))
           requireDeterministic(matched, "predicate")
-          val touchedPaths = matched.select("__p").distinct()
-            .collect().map(_.getString(0)).toSet
-          // touched ⊆ candidates (the match scan read only candidates)
-          candidates.filter(f => touchedPaths.exists(_.endsWith(f.path)))
+          touchedFiles(matched, candidates)
         }
       val (rs, remAdds) =
         if (touched.isEmpty) (None, Nil)
@@ -4627,45 +4586,42 @@ object TxLog {
   /** MERGE (keyed upsert): every target row whose `keyCol` appears in
     * `source` is replaced by the source row; source rows with new keys
     * are inserted — Delta's `MERGE INTO … WHEN MATCHED UPDATE SET * WHEN
-    * NOT MATCHED INSERT *`, at file-granular copy-on-write:
+    * NOT MATCHED INSERT *`. A thin wrapper over [[mergeClauses]]' star
+    * clauses, which the one MERGE engine runs as its star-upsert plan
+    * (see [[mergeClauses]]): one touch-discovery scan, the touched
+    * files rewritten without their matched rows, the staged source
+    * committed as the new rows. A target key held by several live rows
+    * gets one post-image per row (Delta's semantics).
     *
-    *  1. TOUCHED files = live files holding at least one source key,
-    *     found by a distributed semi-join of the target scan (tagged
-    *     with `_metadata.file_path`) against the source keys — the
-    *     exchange carries one row per touched FILE, never data;
-    *  2. touched files are rewritten WITHOUT their matched rows (the
-    *     only target data read — proportional to the touch set);
-    *  3. one commit: removes = touched, adds = remainders + all source
-    *     rows.
-    *
-    * Duplicate keys in `source` are rejected (the Delta multiple-match
-    * error); NULL source keys are rejected (a NULL key matches nothing
-    * and would silently turn the upsert into a blind insert). Conflicts
-    * rebase via [[commitDmlRebase]]: concurrent appends/compactions that
-    * neither touch a matched file nor insert a source key are absorbed;
+    * The source must carry exactly the table's columns, in order (a
+    * [[SchemaMismatchException]] otherwise; generated columns may be
+    * omitted, [[withGenerated]]) unless the table evolves
+    * ([[mergeEvolve]], [[AutoMerge]]). Duplicate keys in `source` are
+    * rejected (the Delta multiple-match error); NULL source keys are
+    * rejected (a NULL key matches nothing and would silently turn the
+    * upsert into a blind insert). On an [[Identity]] table the source
+    * carries the identity columns NULL (explicit values are refused):
+    * matched rows keep the target's ids, inserted rows are allocated
+    * fresh ones. The first merge into a directory with no commits
+    * creates the table from the source. Conflicts rebase via
+    * [[commitDmlRebase]]: concurrent appends/compactions that neither
+    * touch a matched file nor insert a source key are absorbed;
     * genuinely crossing histories throw.
     *
     * With [[DeletionVectors]] enabled the merge is MERGE-ON-READ: the
-    * matched rows' old images die via deletion vectors (positions only,
-    * discovery and vectoring fused into one candidate scan) and the
-    * source rows land as new files — data written ∝ rows changed, never
-    * touched-file bytes; the CoW remainder rewrite (the dominant cost
-    * of a narrow CDC batch into wide files) disappears. Stamps protocol
-    * 3. Schema-changing (evolving) merges keep the CoW path — the
-    * remainder rewrite doubles as realignment. Returns the committed
-    * version. */
+    * matched rows' old images die via deletion vectors and the source
+    * rows land as new files — data written ∝ rows changed, never
+    * touched-file bytes. Schema-changing (evolving) merges keep the
+    * copy-on-write plan — the remainder rewrite doubles as realignment.
+    * Returns the committed version. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
-      keyCol: String): Long = mergeImpl(spark, dir, source, keyCol, None)
+      keyCol: String): Long = upsert(spark, dir, source, Seq(keyCol), None, None)
 
   /** [[merge]] on a COMPOSITE key — `ON` is the conjunction of
-    * per-column equalities. Routed through [[mergeClauses]]' star
-    * clauses: identical upsert semantics, discovery bounded by every
-    * key column's staged min/max (conjoined bounds only sharpen). */
+    * per-column equalities; discovery is bounded by every key column's
+    * staged min/max (conjoined bounds only sharpen). */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
-      keyCols: Seq[String]): Long =
-    if (keyCols.lengthCompare(1) == 0) merge(spark, dir, source, keyCols.head)
-    else mergeClauses(spark, dir, source, keyCols,
-      Seq(WhenMatchedUpdate(), WhenNotMatchedInsert()))
+      keyCols: Seq[String]): Long = upsert(spark, dir, source, keyCols, None, None)
 
   /** [[merge]] tagged with a streaming txn — the upsert sibling of
     * [[appendBatch]]: a replayed (appId, batchId) is SKIPPED (returns
@@ -4681,14 +4637,14 @@ object TxLog {
       keyCol: String, appId: String, batchId: Long): Option[Long] = {
     val pre = headSnapshot(dir)
     if (pre.exists(_.txns.get(appId).exists(_ >= batchId))) return None
-    Some(mergeImpl(spark, dir, source, keyCol, Some((appId, batchId))))
+    Some(upsert(spark, dir, source, Seq(keyCol), Some((appId, batchId)), None))
   }
 
   /** [[merge]] with the read version explicit — the race-test seam. */
   private[graft] def mergeAt(spark: SparkSession, dir: String, source: DataFrame,
       keyCol: String, readVersion: Long,
       txn: Option[(String, Long)] = None): Long =
-    mergeImpl(spark, dir, source, keyCol, txn, Some(readVersion))
+    upsert(spark, dir, source, Seq(keyCol), txn, Some(readVersion))
 
   /** [[merge]] with WRITE-PATH SCHEMA EVOLUTION (Delta's autoMerge):
     * NEW source columns are adopted into the table schema in one commit
@@ -4700,340 +4656,116 @@ object TxLog {
     * every column). The one surface an evolving CDC pipeline needs:
     * without it, the first upstream ALTER TABLE kills the stream.
     * Tables can opt in permanently with `graft.autoMerge=true` instead
-    * ([[AutoMerge]]), which makes plain [[merge]]/[[mergeBatch]]
-    * evolve. */
+    * ([[AutoMerge]]), which makes every star upsert evolve. */
   def mergeEvolve(spark: SparkSession, dir: String, source: DataFrame,
       keyCol: String): Long =
-    mergeImpl(spark, dir, source, keyCol, None, None, evolve = true)
+    upsert(spark, dir, source, Seq(keyCol), None, None, evolve = true)
 
-  private def mergeImpl(spark: SparkSession, dir: String, source0: DataFrame,
-      keyCol: String, txn: Option[(String, Long)],
-      readVersionOpt: Option[Long] = None, evolve: Boolean = false): Long = {
+  /** Every [[merge]] entry point: creates the table on a directory with
+    * no commits, checks the source schema, and on an identity table
+    * spells the star clauses as explicit non-identity column lists
+    * (star clauses would write the identity columns) — then runs the
+    * one MERGE engine. */
+  private def upsert(spark: SparkSession, dir: String, source: DataFrame,
+      keyCols: Seq[String], txn: Option[(String, Long)],
+      readVersionOpt: Option[Long], evolve: Boolean = false): Long = {
     val readVersion = readVersionOpt.getOrElse(latestVersion(dir))
     if (readVersion < 0) return txn match {
       case Some((app, b)) =>
         // table creation from the first batch, still txn-tagged;
         // appendBatch re-checks seen, so a zombie twin cannot double it
-        appendBatch(spark, dir, source0, app, b)
-          .getOrElse(latestVersion(dir))
-      case None => append(spark, dir, source0)
+        appendBatch(spark, dir, source, app, b).getOrElse(latestVersion(dir))
+      case None => append(spark, dir, source)
     }
-    val (snap, meta) = dmlSnapshot(dir, Some(readVersion))
-    val nLive = dmlLiveFiles(spark, dir, snap, meta)
-    // a CDC feed need not carry the table's generated columns
-    val source = withGeneratedCols(snap, source0)
-    val doEvolve = evolve || snap.props.get(AutoMerge.Enabled).contains("true")
-    // IDENTITY ([[Identity]]): matched rows keep the TARGET's
-    // engine-assigned ids, inserted rows allocate fresh ones from the
-    // high-water, and the commit advances the property — resolved
-    // below, once the matched set is known. The key itself cannot be
-    // an identity column: a whole-row upsert matches on caller-carried
-    // key values, which ALWAYS semantics refuse for identity.
-    val idSpecs = identityColsOf(snap.props)
-    require(!idSpecs.contains(keyCol),
-      s"merge: key column $keyCol is GENERATED ALWAYS AS IDENTITY — " +
+    val head = headStateAt(dir, readVersion)
+    val idCols = identityColsOf(head.props).keySet
+    keyCols.foreach(k => require(!idCols.contains(k),
+      s"merge: key column $k is GENERATED ALWAYS AS IDENTITY — " +
         "its values are engine-assigned, so a source cannot carry them; " +
         "merge by a natural key, or use mergeClauses keyed on it with " +
-        "explicit SET/INSERT column lists")
-
-    // Schema resolution. Plain merge: exact identity. Evolving merge:
-    // known columns type-checked (never narrowed/retyped), new source
-    // columns widen the table, missing table columns NULL-fill — the
-    // appendEvolve rules, so the two evolution surfaces agree.
-    val table = snap.schema
-    val (merged, newMaps): (StructType, Map[String, String]) =
-      if (!doEvolve) { requireSchema(snap.schemaDdl, source); (table, Map.empty) }
+        "explicit SET/INSERT column lists"))
+    val evolving = evolve || head.props.get(AutoMerge.Enabled).contains("true")
+    if (!evolving) requireSchema(head.schemaDdl, withGeneratedCols(head, source))
+    val clauses: Seq[MergeClause] =
+      if (idCols.isEmpty) Seq(WhenMatchedUpdate(), WhenNotMatchedInsert())
       else {
-        val known = table.fields.map(f => f.name -> f.dataType).toMap
-        source.schema.fields.foreach { f =>
-          known.get(f.name).foreach { t =>
-            if (t != f.dataType)
-              throw new SchemaMismatchException(
-                s"mergeEvolve: column ${f.name}: table has $t, incoming has ${f.dataType}")
-          }
-        }
-        val newFields = source.schema.fields.filterNot(f => known.contains(f.name))
-        // new columns whose logical name is burned as a physical name
-        // get a fresh suffixed physical (the appendEvolve rule — never
-        // resurrect dropped bytes)
-        val burned = physicalSchema(snap).fieldNames.map(_.toLowerCase).toSet ++
-          droppedPhysOf(snap.props).map(_.toLowerCase)
-        val nm = newFields.filter(f => burned.contains(f.name.toLowerCase))
-          .map(f => f.name -> s"${f.name}__v${readVersion + 1}").toMap
-        (StructType(table.fields ++ newFields), nm)
+        val table = head.schema.fieldNames.toSeq
+        val widening = source.columns.filterNot(table.contains)
+        require(widening.isEmpty, s"merge: ${widening.mkString(", ")} would " +
+          "widen an identity table — add the column(s) with addColumns first")
+        // ALWAYS semantics: explicit identity values are refused — even
+        // for matched rows, whose values would be discarded in favor of
+        // the target's (silently ignoring them is the quiet version of
+        // the bug this check prevents)
+        val present = idCols.filter(source.columns.contains).toSeq
+        require(present.isEmpty ||
+          source.where(present.map(col(_).isNotNull).reduce(_ || _)).isEmpty,
+          s"merge: ${idCols.mkString(", ")} is GENERATED ALWAYS AS " +
+            "IDENTITY — explicit source values are refused; carry the " +
+            "column NULL (matched rows keep the target's id, inserted " +
+            "rows are allocated fresh ones)")
+        val gens = generatedColsOf(head.props).keySet
+        val set = table.filterNot(c => idCols(c) || gens(c)).map(c => c ->
+          (if (source.columns.contains(c)) s"s.`$c`" else "NULL")).toMap
+        Seq(WhenMatchedUpdate(set = set), WhenNotMatchedInsert(values = set))
       }
-    require(merged.fieldNames.contains(keyCol),
-      s"merge: key column $keyCol in neither the table nor the source schema")
-    val widened = merged.length != table.length
-    val fullMap = colMapOf(snap.props) ++ newMaps
-    val physMerged = StructType(merged.fields.map(f =>
-      f.copy(name = fullMap.getOrElse(f.name, f.name))))
-    def toPhysicalMerged(df: DataFrame): DataFrame =
-      if (fullMap.isEmpty) df
-      else df.toDF(df.schema.fieldNames.toSeq.map(n => fullMap.getOrElse(n, n)): _*)
-    // every staged file is schema-complete for the merged layout
-    def alignMerged(df: DataFrame): DataFrame =
-      if (!doEvolve) df
-      else df.select(merged.fields.toSeq.map { f =>
-        if (df.columns.contains(f.name)) col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
+    mergeClausesImpl(spark, dir, source, keyCols, clauses, Some(readVersion),
+      txn, evolve = evolve)
+  }
 
-    // Stage the source FIRST and run every check and join against the
-    // staged re-read: the source plan is evaluated exactly once, so a
-    // non-deterministic source cannot desynchronize the validated keys,
-    // the matched-file set, and the rows that actually land.
-    // partitioned tables stage the source (and remainder) partition-
-    // aligned under the merged mapping, so upserts keep pv pruning sharp
-    val mergePhysParts =
-      partitionColsOf(snap).map(c => fullMap.getOrElse(c, c))
-    def stageMerged(d: DataFrame): (String, Seq[AddFile]) =
-      if (mergePhysParts.isEmpty) stage(spark, dir, d)
-      else stagePartitioned(spark, dir, d, mergePhysParts)
-    var (srcSub, srcAdds) = stageMerged(toPhysicalMerged(alignMerged(source)))
-    var provisionalSub: Option[String] = None // identity pre-resolution staging
-    val staged0 = spark.read.schema(physMerged)
-      .parquet(Paths.get(dir, srcSub).toString)
-    val staged =
-      if (physMerged == merged) staged0
-      else staged0.toDF(merged.fieldNames.toSeq: _*)
-    var published = false // see append: no cleanup past a published commit
-    try {
-      // one fused job: totals + the bounded IN-list (was: a
-      // count/countDistinct/nulls agg, then a distinct().collect() for
-      // IN-eligible batches — guide §2.4, the r19-verdict item-1 fusion)
-      val census = mergeKeyCensus(staged, Seq(keyCol))
-      require(census.nulls == 0, s"merge: NULL $keyCol in source")
-      require(census.rows == census.distinct,
-        s"merge: duplicate $keyCol values in source (${census.rows} rows, " +
-          s"${census.distinct} distinct) — each key must match at most once")
-      // constraints run on the staged re-read (single-evaluation
-      // discipline); a violation lands in the catch, which reclaims
-      // the staging dir
-      requireConstraints(Some(snap), staged)
-      if (idSpecs.nonEmpty) {
-        // ALWAYS semantics: the source must carry identity columns
-        // all-NULL — even for matched rows, whose values are discarded
-        // in favor of the target's (silently ignoring explicit values
-        // would be the quiet version of the bug this check prevents)
-        val explicit = staged.agg(count(when(
-          idSpecs.keys.map(c => col(c).isNotNull).reduce(_ || _),
-          lit(1))).as("n")).head().getLong(0)
-        require(explicit == 0L,
-          s"merge: ${idSpecs.keys.mkString(", ")} is GENERATED ALWAYS " +
-            "AS IDENTITY — explicit source values are refused; carry " +
-            "the column NULL (matched rows keep the target's id, " +
-            "inserted rows are allocated fresh ones)")
+  /** Write-path schema evolution of a star upsert (the [[appendEvolve]]
+    * rules, so the two evolution surfaces agree): known columns keep
+    * their type (a retyped source column is refused), new source columns
+    * widen the table, and a new column whose name is burned as a
+    * physical name gets a fresh suffixed physical name (never resurrect
+    * dropped bytes). Returns the merged schema and the new columns'
+    * logical → physical names. */
+  private def evolvedSchema(snap: Snapshot, source: DataFrame,
+      readVersion: Long): (StructType, Map[String, String]) = {
+    val table = snap.schema
+    val known = table.fields.map(f => f.name -> f.dataType).toMap
+    source.schema.fields.foreach { f =>
+      known.get(f.name).foreach { t =>
+        if (t != f.dataType)
+          throw new SchemaMismatchException(
+            s"mergeEvolve: column ${f.name}: table has $t, incoming has ${f.dataType}")
       }
-
-      val keys = staged.select(col(keyCol)).distinct()
-      // Touch discovery is BOUNDED by the staged source's own key
-      // range before any table file is opened: the staged AddFiles
-      // already carry min/max for the key column (free), so candidate
-      // files are pruned through the same pv/stats machinery a keyed
-      // DELETE rides — a key-localized CDC batch against a partitioned
-      // or key-clustered table opens O(selectivity) files, not the
-      // table. Small batches (≤ mergeInListMax distinct keys, known
-      // from keyStats) sharpen to an IN-list, which pv-prunes
-      // partitioned tables to exact hits. Stats that cannot
-      // discriminate (missing, NaN) fall back to the full live set —
-      // pruning is an optimization, never a correctness dependency.
-      val physKey = fullMap.getOrElse(keyCol, keyCol)
-      val candidates: Seq[AddFile] =
-        if (nLive == 0L || !table.fieldNames.contains(keyCol)) Nil
-        else {
-          import org.apache.spark.sql.{sources => s1}
-          val rangeFilters = addsKeyBounds(srcAdds, physKey).map {
-            case (lo, hi) => Seq(s1.GreaterThanOrEqual(keyCol, lo),
-              s1.LessThanOrEqual(keyCol, hi))
-          }.getOrElse(Nil)
-          val inFilter = census.inLists.head
-            .map(vs => Seq(s1.In(keyCol, vs.toArray[Any]))).getOrElse(Nil)
-          val filters = rangeFilters ++ inFilter
-          dmlCandidates(spark, dir, snap, meta, filters)
-        }
-      // Identity resolution: matched source rows inherit the target's
-      // id (recovered through the key from the candidates' LIVE rows;
-      // duplicate-key targets deterministically contribute their MIN),
-      // unmatched rows number from the snapshot high-water, and the
-      // final frame REPLACES the provisional staging. Race safety is
-      // commitDmlRebase's props conflict: any concurrent high-water
-      // advance changes table properties, which aborts this merge
-      // instead of letting staged ids collide. Identity tables pay one
-      // extra staging pass and one extra candidates scan — documented
-      // costs of dense allocation under the single-evaluation rule.
-      val idProps: Option[Map[String, String]] =
-        if (idSpecs.isEmpty) None
-        else {
-          val idCols = idSpecs.keys.toSeq
-          val hw: Map[String, Long] = idSpecs.map { case (c, sp) =>
-            c -> snap.props.get(Identity.HighWater + c)
-              .flatMap(_.toLongOption).getOrElse(sp.start - sp.step)
-          }
-          val joined =
-            if (candidates.isEmpty)
-              // a fully-pruned candidate set (a purely-new key batch):
-              // no row can be matched — same shape as the join output,
-              // __tid_* included (regression: the race/new-keys spec)
-              idCols.foldLeft(
-                staged.withColumn("__tm", lit(null).cast(BooleanType)))(
-                (d, c) => d.withColumn(s"__tid_$c", lit(null).cast(LongType)))
-            else {
-              // scanFiles masks existing deletion vectors: dead target
-              // rows never donate their ids
-              val live = scanFiles(spark, dir, snap, candidates)
-              val tgt = live.join(keys, Seq(keyCol), "left_semi")
-                .groupBy(col(keyCol))
-                .agg(min(col(idCols.head)).as(s"__tid_${idCols.head}"),
-                  idCols.tail.map(c => min(col(c)).as(s"__tid_$c")): _*)
-                .withColumn("__tm", lit(true))
-              staged.join(tgt, Seq(keyCol), "left_outer")
-            }
-          val matchedRows = joined.where(col("__tm").isNotNull)
-            .select(staged.columns.toSeq.map { c =>
-              if (idSpecs.contains(c)) col(s"__tid_$c").as(c) else col(c)
-            }: _*)
-          val unmatchedRows = joined.where(col("__tm").isNull)
-            .select(staged.columns.toSeq.map(col): _*)
-          val insertedCnt = unmatchedRows.count()
-          val finalRows = matchedRows.unionAll(
-            assignIdentity(spark, unmatchedRows, idSpecs, hw,
-              staged.columns.toSeq))
-          val (s2, a2) = stageMerged(toPhysicalMerged(finalRows))
-          // the provisional staging still feeds the LAZY `keys`/`staged`
-          // frames the discovery joins read downstream — deletion waits
-          // for the method's finally (it is never commit-referenced)
-          provisionalSub = Some(srcSub)
-          srcSub = s2; srcAdds = a2
-          if (insertedCnt == 0L) None
-          else Some(idSpecs.map { case (c, sp) =>
-            Identity.HighWater + c -> (hw(c) + sp.step * insertedCnt).toString
-          })
-        }
-      val mapProps: Option[Map[String, String]] =
-        if (newMaps.isEmpty) None
-        else Some(newMaps.map { case (l, p) => ColumnMapping.Prefix + l -> p })
-      val commitProps: Option[Map[String, String]] = (mapProps, idProps) match {
-        case (Some(a), Some(b)) => Some(a ++ b)
-        case (a, b) => a.orElse(b)
-      }
-      // Merge-on-read ([[DeletionVectors]] enabled): the matched rows'
-      // old images die via deletion vectors (positions only) and the
-      // source rows land as new files — data written ∝ rows changed,
-      // never touched-file bytes (the CoW remainder rewrite, the
-      // dominant cost of a narrow upsert into wide files, disappears).
-      // Schema-changing merges keep the CoW path: the remainder rewrite
-      // doubles as the realignment under the widened layout.
-      val useDv = dvEnabled(snap) && !widened
-      if (useDv && candidates.nonEmpty) {
-        // one pass over the candidates finds touched files AND the
-        // positions the new vectors are written in (deleteWhereDv's
-        // fused discovery)
-        val live = scanLiveWithPos(spark, dir, snap.copy(files = candidates))
-        val matchedPos = live.join(keys, Seq(keyCol), "left_semi")
-        val deadCounts: Map[String, Long] = matchedPos.groupBy(col("__p"))
-          .agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        // touched ⊆ candidates (the coordinates came from their scan)
-        val touched = candidates.filter(f => deadCounts.contains(f.path))
-        val (fullDead, partial) = touched.partition(f => deadCounts(f.path) == f.rows)
-        var dvSub: Option[String] = None
-        val partialAdds =
-          if (partial.isEmpty) Nil
-          else {
-            val partialPaths = partial.map(_.path)
-            val newDead = matchedPos
-              .select(col("__p").as("__dv_path"), col("__i").as("__dv_idx"))
-              .where(col("__dv_path").isin(partialPaths: _*))
-            val oldDirs = partial.flatMap(_.dv.map(_.path)).distinct
-            val allDead =
-              if (oldDirs.isEmpty) newDead
-              else newDead.unionAll(dvFrame(spark, dir, oldDirs)
-                .where(col("__dv_path").isin(partialPaths: _*)))
-            val sub = stageDv(spark, dir, allDead)
-            dvSub = Some(sub)
-            partial.map { f =>
-              val newlyDead = deadCounts(f.path)
-              f.copy(rows = f.rows - newlyDead, dataChange = false,
-                dv = Some(Dv(sub, f.dv.map(_.dead).getOrElse(0L) + newlyDead)))
-            }
-          }
-        val matched = deadCounts.values.sum
-        val v =
-          try commitDmlRebase(spark, dir, "merge", snap, touched,
-            fullDead.map(_.path), partialAdds ++ srcAdds, Nil, txn,
-            Some(3L),
-            if (table.fieldNames.contains(keyCol)) Some((keys, Seq(keyCol))) else None,
-            if (widened) Some(merged.toDDL) else None,
-            commitProps,
-            metrics = Map("rows_matched" -> matched,
-              "rows_inserted" -> (srcAdds.map(_.rows).sum - matched),
-              "files_live" -> nLive,
-              "files_scanned" -> candidates.size.toLong,
-              "files_touched" -> touched.size.toLong))
-          catch { case e: Throwable => dvSub.foreach(deleteStaged(dir, _)); throw e }
-        published = true
-        maybeAutoCompact(spark, dir, Some(snap), srcAdds)
-        return v
-      }
-
-      val touchedPaths: Set[String] =
-        // a key column the table does not have yet matches nothing —
-        // the evolving merge is then a pure insert
-        if (candidates.isEmpty) Set.empty
-        else scanFiles(spark, dir, snap, candidates, tagPath = Some("__p"))
-          .select(col(keyCol), col("__p"))
-          .join(keys, Seq(keyCol), "left_semi")
-          .select("__p").distinct().collect().map(_.getString(0)).toSet
-      val touched = candidates.filter(f =>
-        touchedPaths.exists(_.endsWith(f.path)))
-
-      val (remSub, remainderAdds) =
-        if (touched.isEmpty) (None, Nil)
-        else {
-          val keep = alignMerged(scanFiles(spark, dir, snap, touched))
-            .join(keys, Seq(keyCol), "left_anti")
-          val (sub, adds) = stageMerged(toPhysicalMerged(keep))
-          (Some(sub), adds.map(_.copy(dataChange = false)))
-        }
-      val v =
-        try {
-          val matched = touched.map(_.rows).sum - remainderAdds.map(_.rows).sum
-          commitDmlRebase(spark, dir, "merge", snap, touched,
-            touched.map(_.path), remainderAdds ++ srcAdds, Nil, txn,
-            if (newMaps.isEmpty) None else Some(2L),
-            // the rebase's winner-key scan reads winner files under the
-            // PRE-merge schema; a key column new to the table (evolving
-            // pure-insert) isn't there to scan — and winners committed
-            // under that schema provably cannot contain it, so the
-            // conflict check is vacuous, not skipped-unsafe. (A winner
-            // that CHANGED the schema aborts on the schema check first.)
-            if (table.fieldNames.contains(keyCol)) Some((keys, Seq(keyCol))) else None,
-            if (widened) Some(merged.toDDL) else None,
-            commitProps,
-            metrics = Map("rows_matched" -> matched,
-              "rows_inserted" -> (srcAdds.map(_.rows).sum - matched),
-              // the pruning observables the scale contract is graded
-              // on: candidates actually OPENED by touch discovery vs
-              // the live total, and the files rewritten
-              "files_live" -> nLive,
-              "files_scanned" -> candidates.size.toLong,
-              "files_touched" -> touched.size.toLong))
-        }
-        catch { case e: Throwable => remSub.foreach(deleteStaged(dir, _)); throw e }
-      published = true
-      // the post-merge live set = snap minus touched plus these adds;
-      // passing snap + adds over-counts the removed touched files by
-      // at most |touched| — a stale trigger only makes compactSmall
-      // re-snapshot and no-op (best-effort contract)
-      maybeAutoCompact(spark, dir, Some(snap), remainderAdds ++ srcAdds)
-      v
-    } catch { case e: Throwable =>
-      if (!published) deleteStaged(dir, srcSub) // see append: committed data stays
-      throw e
-    } finally {
-      provisionalSub.foreach(deleteStaged(dir, _)) // never commit-referenced
     }
+    val newFields = source.schema.fields.filterNot(f => known.contains(f.name))
+    val burned = physicalSchema(snap).fieldNames.map(_.toLowerCase).toSet ++
+      droppedPhysOf(snap.props).map(_.toLowerCase)
+    val nm = newFields.filter(f => burned.contains(f.name.toLowerCase))
+      .map(f => f.name -> s"${f.name}__v${readVersion + 1}").toMap
+    (StructType(table.fields ++ newFields), nm)
+  }
+
+  /** What a star upsert's discovery found: matched live target rows per
+    * touched file (decoded relative path), the number of source keys
+    * that matched, and the most target rows any one key matched. */
+  private case class UpsertMatches(perFile: Map[String, Long], keys: Long, mostPerKey: Long)
+
+  /** Star-upsert discovery over `matched` — the candidate rows carrying
+    * a source key, as key columns plus their decoded relative path
+    * `__p`. Grouped by KEY, so duplicate target keys show, then folded
+    * per partition: one shuffle and one collect bounded by partitions ×
+    * touched files, like a distinct over paths. */
+  private def upsertMatches(matched: DataFrame, keyCols: Seq[String]): UpsertMatches = {
+    val parts = matched.groupBy(keyCols.map(col): _*)
+      .agg(collect_list(col("__p")).as("__ps"))
+      .select("__ps").rdd.mapPartitions { it =>
+        val files = scala.collection.mutable.HashMap.empty[String, Long]
+        var keys = 0L
+        var most = 0L
+        it.foreach { r =>
+          val ps = r.getSeq[String](0)
+          keys += 1
+          most = math.max(most, ps.size.toLong)
+          ps.foreach(p => files(p) = files.getOrElse(p, 0L) + 1L)
+        }
+        Iterator((files.toMap, keys, most))
+      }.collect()
+    UpsertMatches(parts.toSeq.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _),
+      parts.map(_._2).sum, parts.map(_._3).foldLeft(0L)(math.max))
   }
 
   // ---- conditional multi-clause MERGE -------------------------------------
@@ -5106,13 +4838,26 @@ object TxLog {
     *
     * The source may carry EXTRA columns (op flags, timestamps) — they
     * drive conditions and expressions but never land in the table.
-    * Same scale shape as [[merge]]: the source is staged once (single
+    * This is the one MERGE engine — [[merge]] and SQL `MERGE INTO`
+    * run through it too. The source is staged once (single
     * evaluation), touch discovery is bounded by the staged key stats
     * (min/max + small-batch IN-list through [[pruneByFilters]]), only
     * touched files are rewritten — unchanged remainder re-added with
-    * dataChange=false, post-images and inserts as new data. Duplicate
-    * and NULL source keys are rejected; [[commitDmlRebase]] conflict
-    * semantics (a concurrent commit inserting a source key aborts).
+    * dataChange=false, post-images and inserts as new data, a complete
+    * change set when [[Cdf]] is on. Duplicate and NULL source keys are
+    * rejected; [[commitDmlRebase]] conflict semantics (a concurrent
+    * commit inserting a source key aborts).
+    *
+    * The clause set alone picks the plan. Exactly an unconditional
+    * `UPDATE SET *` plus an unconditional `INSERT *` is the STAR
+    * UPSERT ([[upsertPlan]]): the source is staged in the table's
+    * layout and committed as the new rows, one touch-discovery scan
+    * finds the touched files, and they are rewritten once without
+    * their matched rows (or, under [[DeletionVectors]], the matched
+    * rows die by vector) — the star upsert writes no change files, so
+    * its rows surface in the change feed as inserts. On a
+    * `graft.autoMerge` table ([[AutoMerge]]) the star upsert widens the
+    * table with new source columns, by [[mergeEvolve]]'s rules.
     *
     * `WHEN NOT MATCHED BY SOURCE` clauses act on target rows NO source
     * row matched — the snapshot-mirror shape (`… BY SOURCE THEN
@@ -5128,8 +4873,8 @@ object TxLog {
     * composite keys pass every column in `keyCols`; the source key
     * TUPLE must be unique and NULL-free. Discovery pruning conjoins
     * each column's staged min/max (+ small IN-lists), which can only
-    * sharpen the bound. Schema evolution is out of scope. Returns the
-    * committed version. */
+    * sharpen the bound. Other clause sets never change the schema.
+    * Returns the committed version. */
   def mergeClauses(spark: SparkSession, dir: String, source: DataFrame,
       keyCol: String, clauses: Seq[MergeClause]): Long =
     mergeClauses(spark, dir, source, Seq(keyCol), clauses)
@@ -5181,12 +4926,14 @@ object TxLog {
     * derived from `snap.props` can never overwrite a concurrent
     * writer's increment. Restricted to feature-neutral keys (a delta
     * that would imply a writer feature is refused — capability enables
-    * go through [[setProperties]], which stamps). */
+    * go through [[setProperties]], which stamps). `evolve` widens the
+    * table for a star upsert ([[mergeEvolve]]). */
   private def mergeClausesImpl(spark: SparkSession, dir: String,
       source0: DataFrame, keyCols: Seq[String], clauses: Seq[MergeClause],
       readVersionOpt: Option[Long],
       txn: Option[(String, Long)] = None,
-      propsTransform: Option[Map[String, String] => Map[String, String]] = None): Long = {
+      propsTransform: Option[Map[String, String] => Map[String, String]] = None,
+      evolve: Boolean = false): Long = {
     require(clauses.nonEmpty, "mergeClauses: at least one WHEN clause")
     require(keyCols.nonEmpty, "mergeClauses: at least one key column")
     require(keyCols.distinct == keyCols,
@@ -5215,6 +4962,18 @@ object TxLog {
     // a CDC feed need not carry the table's generated columns
     val source = withGeneratedCols(snap, source0)
     val table = snap.schema
+    // The clause set alone picks the plan: exactly an unconditional
+    // UPDATE SET * plus an unconditional INSERT * is the STAR UPSERT,
+    // whose new rows are the source rows themselves — staged once in
+    // the table's layout and committed as they are.
+    val star = clauses.lengthCompare(2) == 0 &&
+      clauses.toSet == Set[MergeClause](WhenMatchedUpdate(), WhenNotMatchedInsert())
+    val evolving = star &&
+      (evolve || snap.props.get(AutoMerge.Enabled).contains("true"))
+    val (merged, newMaps) =
+      if (evolving) evolvedSchema(snap, source, readVersion)
+      else (table, Map.empty[String, String])
+    val widened = merged.length != table.length
 
     // GENERATED ALWAYS AS IDENTITY and generated columns as clause
     // targets — the updateImpl rules, mirrored here so SQL MERGE and
@@ -5271,7 +5030,7 @@ object TxLog {
     }
 
     keyCols.foreach { k =>
-      require(table.fieldNames.contains(k),
+      require(merged.fieldNames.contains(k),
         s"mergeClauses: key column $k not in the table schema")
       require(source.columns.contains(k),
         s"mergeClauses: key column $k not in the source")
@@ -5288,7 +5047,7 @@ object TxLog {
     val starNeedsAll =
       matched.exists { case u: WhenMatchedUpdate => u.set.isEmpty; case _ => false } ||
         inserts.exists(_.values.isEmpty)
-    if (starNeedsAll) table.fieldNames.foreach(c =>
+    if (starNeedsAll && !evolving) table.fieldNames.foreach(c =>
       require(source.columns.contains(c),
         s"mergeClauses: a star clause needs source column $c"))
     (matched.collect { case u: WhenMatchedUpdate => u.set.keys }.flatten ++
@@ -5297,15 +5056,43 @@ object TxLog {
       require(table.fieldNames.contains(c),
         s"mergeClauses: SET/INSERT column $c not in the table schema"))
 
-    // scratch-stage the source under its OWN schema: the plan evaluates
-    // exactly once, its key stats bound discovery, and it never becomes
-    // a table add (extra columns must not land)
-    val (scratchSub, scratchAdds) = stage(spark, dir, source)
+    // Stage the source FIRST and run every check and join against the
+    // staged re-read: the source plan evaluates exactly once, so a
+    // non-deterministic source cannot desynchronize the validated keys,
+    // the matched-file set and the rows that land; its key stats bound
+    // discovery. The star upsert stages it in the table's (merged)
+    // physical layout, partition-aligned — those files ARE the commit's
+    // new rows. Any other clause set scratch-stages it under its OWN
+    // schema, never a table add (extra columns must not land).
+    val fullMap = colMapOf(snap.props) ++ newMaps
+    val physMerged = StructType(merged.fields.map(f =>
+      f.copy(name = fullMap.getOrElse(f.name, f.name))))
+    def physName(c: String): String = if (star) fullMap.getOrElse(c, c) else c
+    // a frame with (some of) the merged columns, in the merged physical
+    // layout: absent columns read NULL (an evolving source may omit them)
+    def alignMerged(df: DataFrame): DataFrame =
+      df.select(merged.fields.toSeq.map { f =>
+        (if (df.columns.contains(f.name)) col(f.name) else lit(null))
+          .cast(f.dataType).as(physName(f.name))
+      }: _*)
+    def stageMerged(df: DataFrame): (String, Seq[AddFile]) = {
+      val parts = partitionColsOf(snap).map(physName)
+      if (parts.isEmpty) stage(spark, dir, alignMerged(df))
+      else stagePartitioned(spark, dir, alignMerged(df), parts)
+    }
+    val (stagedSub, stagedAdds) =
+      if (star) stageMerged(source) else stage(spark, dir, source)
     var published = false
     val cleanup = scala.collection.mutable.ListBuffer[String]()
     try {
-      val staged = spark.read.schema(source.schema)
-        .parquet(Paths.get(dir, scratchSub).toString)
+      val staged =
+        if (!star) spark.read.schema(source.schema)
+          .parquet(Paths.get(dir, stagedSub).toString)
+        else {
+          val s0 = spark.read.schema(physMerged)
+            .parquet(Paths.get(dir, stagedSub).toString)
+          if (physMerged == merged) s0 else s0.toDF(merged.fieldNames.toSeq: _*)
+        }
       val keyTuple = keyCols.map(col)
       // one fused job: totals + the bounded per-column IN-lists (was:
       // a count/countDistinct/nulls/perColDistinct agg, then one
@@ -5317,21 +5104,26 @@ object TxLog {
       require(census.rows == census.distinct,
         s"mergeClauses: duplicate (${keyCols.mkString(", ")}) values in " +
           "source — each key must match at most once")
-      val keys = staged.select(keyTuple: _*).distinct()
+      // unique by the census: no distinct pass
+      val keys = staged.select(keyTuple: _*)
+      // the star upsert's staged rows are its new rows: constraints run
+      // on them here (the clause plan checks the rows it builds)
+      if (star) requireConstraints(Some(snap), staged)
 
-      // candidate files bounded by the staged source's key stats —
-      // the same discovery bound the plain merge rides, conjoined
-      // per key column (each column's bound is independently sound,
+      // candidate files bounded by the staged source's key stats,
+      // conjoined per key column (each column's bound is independently sound,
       // so the conjunction can only sharpen). A by-source clause may
       // fire on ANY target row, so its presence forces the full live
       // set — the clause's inherent cost, surfaced in files_scanned.
+      // A key column new to the table (an evolving upsert) matches
+      // nothing: the merge is then a pure insert.
       val candidates: Seq[AddFile] =
-        if (nLive == 0L) Nil
+        if (nLive == 0L || !keyCols.forall(table.fieldNames.contains)) Nil
         else if (bySource.nonEmpty) dmlCandidates(spark, dir, snap, meta, Nil)
         else {
           import org.apache.spark.sql.{sources => s1}
           val filters = keyCols.zipWithIndex.flatMap { case (kc, i) =>
-            val range = addsKeyBounds(scratchAdds, kc).map {
+            val range = addsKeyBounds(stagedAdds, physName(kc)).map {
               case (lo, hi) => Seq(s1.GreaterThanOrEqual(kc, lo),
                 s1.LessThanOrEqual(kc, hi))
             }.getOrElse(Nil)
@@ -5341,6 +5133,41 @@ object TxLog {
           }
           dmlCandidates(spark, dir, snap, meta, filters)
         }
+
+      // One commit for either plan, with the rider and identity props.
+      // A key column new to the table (an evolving upsert) has no winner
+      // rows to scan for conflicts: winners committed under the old
+      // schema cannot hold it (a winner that CHANGED the schema aborts
+      // on the schema check first).
+      def commit(o: MergeOutcome): Long = {
+        val riderProps: Option[Map[String, String]] =
+          propsTransform.map(_(snap.props)).filter(_.nonEmpty).map { delta =>
+            validateProps(dir, delta)
+            val implied = impliedWriterFeatures(delta.filter(_._2.nonEmpty), Set.empty)
+            require(implied.isEmpty, "mergeClauses: the propsTransform rider " +
+              s"would imply writer feature(s) ${implied.mkString(", ")} — " +
+              "capability enables go through setProperties, which stamps them")
+            o.props.foreach(ip => require(ip.keySet.intersect(delta.keySet).isEmpty,
+              "mergeClauses: propsTransform rider collides with the identity " +
+                "high-water keys"))
+            delta
+          }
+        val mapProps = Some(newMaps.map { case (l, ph) => ColumnMapping.Prefix + l -> ph })
+          .filter(_.nonEmpty)
+        val v = commitDmlRebase(spark, dir, "merge", snap, o.touched,
+          o.removes, o.adds, o.cdf, txn,
+          o.protocol.orElse(if (newMaps.isEmpty) None else Some(2L)),
+          if (keyCols.forall(table.fieldNames.contains)) Some((keys, keyCols)) else None,
+          if (widened) Some(merged.toDDL) else None,
+          newProps = Seq(mapProps, o.props, riderProps).flatten.reduceOption(_ ++ _),
+          winnerAddsConflict = bySource.nonEmpty,
+          metrics = o.metrics)
+        published = true
+        maybeAutoCompact(spark, dir, Some(snap), o.adds)
+        v
+      }
+      if (star) return commit(upsertPlan(spark, dir, snap, staged, stagedAdds,
+        keyCols, candidates, nLive, dvEnabled(snap) && !widened, stageMerged, cleanup))
 
       def condOrTrue(c: Option[String]): String = c.getOrElse("TRUE")
       val keyEq = keyCols.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
@@ -5352,20 +5179,16 @@ object TxLog {
         .reduceOption(_ || _).getOrElse(lit(false))
       val bTrig = bySource.map(c => expr(condOrTrue(c.condition)))
         .reduceOption(_ || _).getOrElse(lit(false))
-      val touchedPaths: Set[String] =
-        if (candidates.isEmpty || (matched.isEmpty && bySource.isEmpty)) Set.empty
+      val touched =
+        if (candidates.isEmpty || (matched.isEmpty && bySource.isEmpty)) Nil
         else if (bySource.isEmpty)
-          scanFiles(spark, dir, snap, candidates, tagPath = Some("__p"))
+          touchedFiles(scanFiles(spark, dir, snap, candidates, tagPath = Some("__p"))
             .alias("t").join(staged.alias("s"), keyEq)
-            .where(mTrig)
-            .select("__p").distinct().collect().map(_.getString(0)).toSet
+            .where(mTrig), candidates)
         else
-          scanFiles(spark, dir, snap, candidates, tagPath = Some("__p"))
+          touchedFiles(scanFiles(spark, dir, snap, candidates, tagPath = Some("__p"))
             .alias("t").join(staged.alias("s"), keyEq, "left_outer")
-            .where((!srcNull && mTrig) || (srcNull && bTrig))
-            .select("__p").distinct().collect().map(_.getString(0)).toSet
-      val touched = candidates.filter(f =>
-        touchedPaths.exists(_.endsWith(f.path)))
+            .where((!srcNull && mTrig) || (srcNull && bTrig)), candidates)
 
       // rewrite the touched files: first-firing clause per row, in
       // declaration order WITHIN its group (matched vs by-source rows
@@ -5561,45 +5384,115 @@ object TxLog {
         else Some(idSpecs.map { case (c, sp) =>
           Identity.HighWater + c -> (idHw(c) + sp.step * idInserted).toString
         })
-      val riderProps: Option[Map[String, String]] =
-        propsTransform.map(_(snap.props)).filter(_.nonEmpty).map { delta =>
-          validateProps(dir, delta)
-          val implied = impliedWriterFeatures(delta.filter(_._2.nonEmpty), Set.empty)
-          require(implied.isEmpty, "mergeClauses: the propsTransform rider " +
-            s"would imply writer feature(s) ${implied.mkString(", ")} — " +
-            "capability enables go through setProperties, which stamps them")
-          idProps.foreach(ip => require(ip.keySet.intersect(delta.keySet).isEmpty,
-            "mergeClauses: propsTransform rider collides with the identity " +
-              "high-water keys"))
-          delta
-        }
-      val mergedProps: Option[Map[String, String]] = (idProps, riderProps) match {
-        case (Some(a), Some(b)) => Some(a ++ b)
-        case (a, b) => a.orElse(b)
-      }
-      val v = commitDmlRebase(spark, dir, "merge", snap, touched,
-        removes, keepAdds ++ postAdds ++ partialAdds ++ insertAdds, cdfAdds,
-        txn, if (partialAdds.nonEmpty) Some(3L) else None,
-        Some((keys, keyCols)),
-        newProps = mergedProps,
-        winnerAddsConflict = bySource.nonEmpty,
-        metrics = Map(
+      commit(MergeOutcome(touched, removes,
+        keepAdds ++ postAdds ++ partialAdds ++ insertAdds, cdfAdds,
+        if (partialAdds.nonEmpty) Some(3L) else None, idProps,
+        Map(
           "rows_matched" -> matchedCount,
           "rows_updated" -> postAdds.map(_.rows).sum,
           "rows_deleted" -> (matchedCount - postAdds.map(_.rows).sum),
           "rows_inserted" -> insertAdds.map(_.rows).sum,
           "files_live" -> nLive,
           "files_scanned" -> candidates.size.toLong,
-          "files_touched" -> touched.size.toLong))
-      published = true
-      v
+          "files_touched" -> touched.size.toLong)))
     } catch { case e: Throwable =>
-      if (!published) cleanup.foreach(deleteStaged(dir, _))
+      if (!published) {
+        cleanup.foreach(deleteStaged(dir, _))
+        if (star) deleteStaged(dir, stagedSub)
+      }
       throw e
     } finally {
-      // the scratch source staging is never referenced by any commit
-      deleteStaged(dir, scratchSub)
+      // a scratch staging is never referenced by any commit
+      if (!star) deleteStaged(dir, stagedSub)
     }
+  }
+
+  /** One MERGE plan's result, committed by [[mergeClausesImpl]]. */
+  private case class MergeOutcome(touched: Seq[AddFile], removes: Seq[String],
+      adds: Seq[AddFile], cdf: Seq[AddFile], protocol: Option[Long],
+      props: Option[Map[String, String]], metrics: Map[String, Long])
+
+  /** The STAR-UPSERT plan (`UPDATE SET *` + `INSERT *`, no conditions):
+    * the staged source — already in the table's layout — is the
+    * commit's new rows, one per source key, so neither post-images nor
+    * inserts are evaluated from a join. One candidate scan (key column
+    * and file) finds the touched files and, grouped by key, how many
+    * live rows each matched key hit; then
+    *  - copy-on-write: the touched files are rewritten once, without
+    *    their matched rows (the remainder, dataChange=false);
+    *  - merge-on-read (`useDv`): matched rows die via deletion vectors
+    *    — whole files by remove, partial files by positions read from
+    *    those files alone — and nothing is rewritten.
+    * A key matching n > 1 target rows gets n − 1 extra copies of its
+    * source row (one post-image per matched row), staged only when the
+    * scan saw such a key. No change files are written: the commit's
+    * source rows surface in the change feed as insert-class changes. */
+  private def upsertPlan(spark: SparkSession, dir: String, snap: Snapshot,
+      staged: DataFrame, stagedAdds: Seq[AddFile], keyCols: Seq[String],
+      candidates: Seq[AddFile], nLive: Long, useDv: Boolean,
+      stageMerged: DataFrame => (String, Seq[AddFile]),
+      cleanup: scala.collection.mutable.ListBuffer[String]): MergeOutcome = {
+    val keys = staged.select(keyCols.map(col): _*)
+    def keyed(scan: DataFrame): DataFrame =
+      scan.select((keyCols :+ "__p").map(col): _*).join(keys, keyCols, "left_semi")
+    val found =
+      if (candidates.isEmpty) UpsertMatches(Map.empty, 0L, 0L)
+      else if (useDv)
+        upsertMatches(keyed(scanLiveWithPos(spark, dir, snap.copy(files = candidates))), keyCols)
+      else
+        upsertMatches(keyed(scanFiles(spark, dir, snap, candidates, tagPath = Some("__p")))
+          .withColumn("__p", relPath(col("__p"))), keyCols)
+    val touched = candidates.filter(f => found.perFile.contains(f.path))
+    val extraAdds =
+      if (found.mostPerKey <= 1L) Nil
+      else {
+        val counts = scanFiles(spark, dir, snap, touched).select(keyCols.map(col): _*)
+          .join(keys, keyCols, "left_semi")
+          .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__n"))
+          .where(col("__n") > 1L)
+        val (sub, adds) = stageMerged(staged.join(counts, keyCols)
+          .withColumn("__copy", explode(sequence(lit(2L), col("__n")))))
+        cleanup += sub
+        adds
+      }
+    val (removes, rewritten) =
+      if (touched.isEmpty) (Nil, Nil)
+      else if (useDv) {
+        val (fullDead, partial) = touched.partition(f => found.perFile(f.path) == f.rows)
+        val partialAdds =
+          if (partial.isEmpty) Nil
+          else {
+            val newDead = scanLiveWithPos(spark, dir, snap.copy(files = partial))
+              .join(keys, keyCols, "left_semi")
+              .select(col("__p").as("__dv_path"), col("__i").as("__dv_idx"))
+            val partialPaths = partial.map(_.path)
+            val oldDirs = partial.flatMap(_.dv.map(_.path)).distinct
+            val allDead =
+              if (oldDirs.isEmpty) newDead
+              else newDead.unionAll(dvFrame(spark, dir, oldDirs)
+                .where(col("__dv_path").isin(partialPaths: _*)))
+            val sub = stageDv(spark, dir, allDead)
+            cleanup += sub
+            partial.map { f =>
+              val newlyDead = found.perFile(f.path)
+              f.copy(rows = f.rows - newlyDead, dataChange = false,
+                dv = Some(Dv(sub, f.dv.map(_.dead).getOrElse(0L) + newlyDead)))
+            }
+          }
+        (fullDead.map(_.path), partialAdds)
+      } else {
+        val (sub, adds) = stageMerged(
+          scanFiles(spark, dir, snap, touched).join(keys, keyCols, "left_anti"))
+        cleanup += sub
+        (touched.map(_.path), adds.map(_.copy(dataChange = false)))
+      }
+    MergeOutcome(touched, removes, rewritten ++ stagedAdds ++ extraAdds, Nil,
+      if (rewritten.exists(_.dv.nonEmpty)) Some(3L) else None, None,
+      Map("rows_matched" -> found.perFile.values.sum,
+        "rows_inserted" -> (stagedAdds.map(_.rows).sum - found.keys),
+        "files_live" -> nLive,
+        "files_scanned" -> candidates.size.toLong,
+        "files_touched" -> touched.size.toLong))
   }
 
   // ---- DDL (catalog-facing) ---------------------------------------------
@@ -6083,11 +5976,8 @@ object TxLog {
       case None => tagged.where(condition)
     }
     requireDeterministic(matchedFiles, "predicate")
-    val touchedPaths = matchedFiles.select("__p").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touchedPaths.isEmpty) return readVersion
-    // touched ⊆ candidates (the match scan read only candidate files)
-    val touched = candidates.filter(f => touchedPaths.exists(_.endsWith(f.path)))
+    val touched = touchedFiles(matchedFiles, candidates)
+    if (touched.isEmpty) return readVersion
 
     val touchedDf = scanFiles(spark, dir, snap, touched)
     val keep = keys match {
@@ -6251,12 +6141,8 @@ object TxLog {
     val matching = scanFiles(spark, dir, snap, candidates, tagPath = Some("__p"))
       .where(condition)
     requireDeterministic(matching, "predicate")
-    val touchedPaths = matching
-      .select(col("__p"))
-      .distinct().collect().map(_.getString(0)).toSet
-    if (touchedPaths.isEmpty) return readVersion
-    // touched ⊆ candidates (the match scan read only candidate files)
-    val touched = candidates.filter(f => touchedPaths.exists(_.endsWith(f.path)))
+    val touched = touchedFiles(matching, candidates)
+    if (touched.isEmpty) return readVersion
 
     val touchedDf = scanFiles(spark, dir, snap, touched)
     val cond = coalesce(expr(condition), lit(false))

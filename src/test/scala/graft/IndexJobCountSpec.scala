@@ -130,10 +130,50 @@ class IndexJobCountSpec extends AnyFunSuite with SparkTestBase {
     assert(jobs === DagJobs, s"arrival DAG job shape changed: $jobs")
   }
 
+  /** A key-clustered 8k-row table (4 appends of 2k consecutive keys,
+    * one file each), then `batches` star upserts of 400 rows: 280
+    * updates spread over every file, 120 new keys. Returns the jobs of
+    * the last upsert and the live-file count after it. */
+  private def upsertRun(name: String, dv: Boolean, batches: Int): (Int, Int) = {
+    val dir = root(name)
+    (0 until 4).foreach { c =>
+      TxLog.append(spark, dir, spark.range(c * 2000L, (c + 1) * 2000L, 1, 1)
+        .select(col("id"), (col("id") % 97).cast("int").as("v"), lit("b0").as("tag")))
+    }
+    if (dv) TxLog.setProperties(dir, Map(TxLog.DeletionVectors.Enabled -> "true"))
+    def batch(b: Int) = {
+      val upd = spark.range(0, 280, 1, 2).select(((col("id") * 29 + b * 7) % 8000).as("id"))
+      val ins = spark.range(0, 120, 1, 2).select((col("id") + 8000 + b * 120).as("id"))
+      upd.unionAll(ins).select(col("id"), lit(b).as("v"), lit(s"b$b").as("tag"))
+    }
+    (1 until batches).foreach(b => TxLog.merge(spark, dir, batch(b), "id"): Unit)
+    val jobs = countJobs { TxLog.merge(spark, dir, batch(batches), "id"): Unit }
+    val rows = TxLog.read(spark, dir)
+    assert(rows.count() === 8000L + 120L * batches)
+    assert(rows.where(s"tag = 'b$batches'").count() === 400L)
+    (jobs, TxLog.snapshot(dir).files.size)
+  }
+
+  test("TxLog.merge star upsert: job count and live files are pinned (copy-on-write)") {
+    val (jobs, files) = upsertRun("jobs-upsert-cow", dv = false, batches = 4)
+    info(s"star upsert jobs: $jobs, live files after 4 upserts: $files")
+    assert(jobs === UpsertCowJobs, s"star upsert job shape changed: $jobs")
+    assert(files === UpsertCowFiles, s"star upsert file layout changed: $files")
+  }
+
+  test("TxLog.merge star upsert: job count and live files are pinned (deletion vectors)") {
+    val (jobs, files) = upsertRun("jobs-upsert-dv", dv = true, batches = 4)
+    info(s"star upsert jobs (DV): $jobs, live files after 4 upserts: $files")
+    assert(jobs === UpsertDvJobs, s"DV star upsert job shape changed: $jobs")
+    assert(files === UpsertDvFiles, s"DV star upsert file layout changed: $files")
+  }
+
   // The pinned action shapes (local[4] test session, AQE on, fixed
   // 200-row corpus, one embedding-flip update window). Accounting:
   // IVF/PQ windows are ~12 SQL executions — the change-set checkpoint
-  // + fused stats agg, then the merge machinery's staging write, the
+  // + fused stats agg, then the MERGE engine's clause plan (their
+  // clauses are conditional, so not the star-upsert plan pinned
+  // below): the scratch staging write, the
   // FUSED key census (r20: one groupBy + bounded-fold job carries the
   // totals AND the IN-list; the separate countDistinct agg and the
   // per-column distinct().collect() are gone — 27 → 24 here), touch
@@ -171,4 +211,18 @@ class IndexJobCountSpec extends AnyFunSuite with SparkTestBase {
   // silver adds its one medians job. Before in-write stats each staged
   // write also paid a stats groupBy-by-file scan.
   private val DagJobs = 26
+  // One star upsert (the fourth into the same table): the source
+  // staging write, the two-job key census, touch discovery (the key
+  // broadcast, the grouped-by-key shuffle, its collect), then the
+  // remainder rewrite (key broadcast, write) — or, under deletion
+  // vectors, the DV anti-join stage of the already-vectored candidates
+  // in discovery, and the position write over the partial files alone
+  // (key broadcast, DV anti-join stage, write). Measured before the
+  // merge engines were unified, `mergeImpl` paid 10 / 12 jobs: a
+  // distinct() shuffle ahead of every key broadcast (the census already
+  // proves the keys unique). Live files after the 4 upserts: 20 at both.
+  private val UpsertCowJobs = 8
+  private val UpsertCowFiles = 20
+  private val UpsertDvJobs = 10
+  private val UpsertDvFiles = 20
 }

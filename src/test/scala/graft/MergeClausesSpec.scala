@@ -477,6 +477,44 @@ class MergeClausesSpec extends AnyFunSuite with SparkTestBase {
     assert(got.size === 11)
   }
 
+  test("single-key and composite-key upserts agree, duplicate target keys included") {
+    import spark.implicits._
+    // (id, k2 = 0, v): the tuple (id, k2) matches exactly where id does;
+    // id 1 is held by TWO live rows, each gets its own post-image
+    def run(name: String, upsert: (String, org.apache.spark.sql.DataFrame) => Long) = {
+      val dir = fresh(name)
+      TxLog.append(spark, dir, Seq((1L, 0L, "a"), (1L, 0L, "b"), (2L, 0L, "c"))
+        .toDF("id", "k2", "v").coalesce(1))
+      TxLog.append(spark, dir, Seq((3L, 0L, "d")).toDF("id", "k2", "v"))
+      TxLog.setProperties(dir, Map(TxLog.Cdf.Enabled -> "true"))
+      val from = TxLog.latestVersion(dir)
+      val v = upsert(dir, Seq((1L, 0L, "U"), (3L, 0L, "W"), (7L, 0L, "N"))
+        .toDF("id", "k2", "v"))
+      val state = TxLog.read(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getString(2))).toSeq.sorted
+      val metrics = TxLog.history(spark, dir).where(s"version = $v")
+        .select(explode(col("metrics"))).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val feed = TxLog.readChangeFeed(spark, dir, from)
+        .select("id", "v", "_change_type").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq.sorted
+      (state, metrics, feed)
+    }
+    val single = run("upsert1", (d, src) => TxLog.merge(spark, d, src, "id"))
+    val composite = run("upsert2", (d, src) => TxLog.merge(spark, d, src, Seq("id", "k2")))
+    assert(single._1 === Seq((1L, "U"), (1L, "U"), (2L, "c"), (3L, "W"), (7L, "N")))
+    assert(composite._1 === single._1)
+    assert(single._2.keySet === Set("rows_matched", "rows_inserted",
+      "files_live", "files_scanned", "files_touched"))
+    assert(composite._2.keySet === single._2.keySet)
+    assert(single._2("rows_matched") === 3L && single._2("rows_inserted") === 1L)
+    assert(composite._2 === single._2)
+    // the star upsert writes no change files: its new rows are inserts
+    assert(single._3 === Seq((1L, "U", "insert"), (1L, "U", "insert"),
+      (3L, "W", "insert"), (7L, "N", "insert")))
+    assert(composite._3 === single._3)
+  }
+
   test("composite keys: tuple duplicates refused, per-column repeats fine") {
     import spark.implicits._
     val dir = fresh("compdup")

@@ -204,6 +204,45 @@ class TxDmlSpec extends AnyFunSuite with SparkTestBase {
     assert(metricsOf(0L) === Map.empty)
   }
 
+  test("DML finds a CONVERTed file whose name needs URI escaping") {
+    import spark.implicits._
+    // `_metadata.file_path` spells this name `my%20data%251+x.parquet`
+    def converted(dv: Boolean): String = {
+      val dir = tmp()
+      val raw = graft.Scratch.dir("graft-txdml-raw").toString + "/p"
+      df(1 until 4).coalesce(1).write.parquet(raw)
+      val f = new java.io.File(raw).listFiles().filter(_.getName.endsWith(".parquet")).head
+      Files.createDirectories(java.nio.file.Paths.get(dir))
+      Files.copy(f.toPath, java.nio.file.Paths.get(dir, "my data%1+x.parquet"))
+      TxLog.convertFromParquet(spark, dir)
+      if (dv) TxLog.setProperties(dir, Map(TxLog.DeletionVectors.Enabled -> "true"))
+      dir
+    }
+    def rows(dir: String): Set[(Long, String)] =
+      TxLog.read(spark, dir).collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val base = Set((1L, "v1"), (2L, "v2"), (3L, "v3"))
+
+    val conv = converted(dv = false)
+    assert(TxLog.snapshot(conv).files.map(_.rows) === Seq(3L), "CONVERT reads the file's stats")
+    TxLog.merge(spark, conv, Seq((1L, "U1", 1), (9L, "N9", 0)).toDF("id", "s", "grp"), "id")
+    assert(rows(conv) === base - ((1L, "v1")) + ((1L, "U1")) + ((9L, "N9")))
+
+    val upd = converted(dv = false)
+    TxLog.update(spark, upd, "id = 3", Map("s" -> "'u3'"))
+    assert(rows(upd) === base - ((3L, "v3")) + ((3L, "u3")))
+
+    val del = converted(dv = false)
+    TxLog.delete(spark, del, "id = 2")
+    assert(rows(del) === base - ((2L, "v2")))
+
+    val dvDel = converted(dv = true)
+    TxLog.delete(spark, dvDel, "id = 2")
+    assert(rows(dvDel) === base - ((2L, "v2")))
+    assert(TxLog.snapshot(dvDel).files.flatMap(_.dv).nonEmpty, "the delete wrote a vector")
+    TxLog.merge(spark, dvDel, Seq((3L, "U3", 0)).toDF("id", "s", "grp"), "id")
+    assert(rows(dvDel) === Set((1L, "v1"), (3L, "U3")))
+  }
+
   // ---- merge schema evolution ---------------------------------------------
 
   test("mergeEvolve adopts a new source column; history null-backfills") {
