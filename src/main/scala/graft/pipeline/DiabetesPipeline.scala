@@ -411,8 +411,7 @@ object DiabetesPipeline {
   /** Run the full batch DAG. */
   def run(spark: SparkSession, dataDir: String, workDir: String, rc: RunContext): PipelineResult = {
     val defs = tableDefs(spark, rc, _ => bronzeBatch(spark, dataDir, rc))
-    // 768-row corpus: single-file sinks (see PipelineGraph.run Scaladoc).
-    val result = PipelineGraph.run(spark, defs, workDir, sinkPartitions = Some(1))
+    val result = PipelineGraph.run(spark, defs, workDir)
     result.expectationMetrics(spark).createOrReplaceTempView("pipeline_expectation_metrics")
     result
   }

@@ -79,7 +79,8 @@ object PipelineResult {
   *     `Dataset.observe` (single pass — the metrics piggyback on the sink
   *     write, no extra scan even at 100 TB), filter Drop-mode violations,
   *     write the parquet sink, then re-read the sink so downstream nodes
-  *     consume the materialized table exactly like `dlt.read` (S3/S5).
+  *     consume the materialized table exactly like `dlt.read` (S3/S5) —
+  *     on one partition when the table is small (see [[run]]).
   *  3. Per view node: no materialization, just registration (S4).
   *
   * Scale: each node is one Spark job over declarative DataFrames —
@@ -105,19 +106,23 @@ object PipelineGraph {
     done.toSeq.map(byName)
   }
 
+  /** Independent nodes run CONCURRENTLY on this many threads (the
+    * reference's gold fan-out is 8 independent jobs off silver, SURVEY.md
+    * §3.1 — DLT schedules them in parallel and so does this runner).
+    * Spark job submission is thread-safe; each node completes its own
+    * sink write + metric collection before dependents start. */
+  private val Parallelism = 4
+
   /** Run the graph; sinks go under `workDir/<table>`.
     *
-    * `sinkPartitions`: optional file-count control for the parquet sinks —
-    * the stand-in for DLT's `pipelines.autoOptimize.managed` compaction.
-    * Small corpora (the 768-row diabetes run) write 1 file per table
-    * instead of one per task; leave None at scale so writes stay
-    * partition-parallel.
-    *
-    * `parallelism`: independent nodes run CONCURRENTLY (the reference's
-    * gold fan-out is 8 independent jobs off silver, SURVEY.md §3.1 —
-    * DLT schedules them in parallel and so does this runner). Spark job
-    * submission is thread-safe; each node completes its own sink write +
-    * metric collection before dependents start.
+    * Every table node's sink is re-read through
+    * [[graft.sources.SmallTable.onePartition]]: a sink whose files total
+    * at most `spark.sql.adaptive.coalescePartitions.minPartitionSize`
+    * (1 MB by default, the size below which AQE coalesces a whole shuffle
+    * into one reducer) reaches its dependents, the temp views and the
+    * returned [[PipelineResult]] as one partition, so their aggregates
+    * and sorts plan no shuffle and their writes stage one file. Larger
+    * sinks stay partition-parallel.
     *
     * `transactionalSinks`: route every table sink through the
     * [[graft.sources.TxLog]] table format instead of plain parquet
@@ -137,7 +142,6 @@ object PipelineGraph {
     * cross-table view — a mid-run crash publishes nothing, so they keep
     * seeing the previous complete run. */
   def run(spark: SparkSession, defs: Seq[TableDef], workDir: String,
-      sinkPartitions: Option[Int] = None, parallelism: Int = 4,
       transactionalSinks: Boolean = false,
       publishRun: Boolean = false): PipelineResult = {
     require(!publishRun || transactionalSinks,
@@ -169,30 +173,33 @@ object PipelineGraph {
           // Violation counts observed in the same pass as the sink write:
           // one sum(when(!pred,1)) per expectation plus a row count. Metric
           // names are prefixed exp_ so an expectation named "rows" cannot
-          // collide with the reserved row-count metric.
+          // collide with the reserved row-count metric. A node without
+          // expectations observes nothing: its metrics would go unread.
           val expNames = t.expectations.map(_.name)
           require(expNames.distinct.size == expNames.size,
             s"${t.name}: duplicate expectation names: ${expNames.mkString(", ")}")
-          val obs = Observation(s"${t.name}_expectations_${System.nanoTime()}")
-          val metricCols = count(lit(1)).as("rows") +:
-            t.expectations.map(e =>
-              sum(when(expr(e.predicate), 0L).otherwise(1L)).as(s"exp_${e.name}"))
-          val observed = built.observe(obs, metricCols.head, metricCols.tail: _*)
+          val obs = Option.when(t.expectations.nonEmpty)(
+            Observation(s"${t.name}_expectations_${System.nanoTime()}"))
+          val observed = obs.fold(built) { o =>
+            val metricCols = count(lit(1)).as("rows") +:
+              t.expectations.map(e =>
+                sum(when(expr(e.predicate), 0L).otherwise(1L)).as(s"exp_${e.name}"))
+            built.observe(o, metricCols.head, metricCols.tail: _*)
+          }
           val dropPreds = t.expectations.filter(_.mode == Expectation.Drop)
           val filtered = dropPreds.foldLeft(observed)((df, e) => df.filter(expr(e.predicate)))
           val sink = s"$workDir/${t.name}"
-          val sized = sinkPartitions.map(filtered.coalesce).getOrElse(filtered)
           if (transactionalSinks) {
             require(t.partitionBy.size <= 1,
               s"${t.name}: transactional sinks support at most one partition column")
             val v =
               if (t.partitionBy.isEmpty)
-                graft.sources.TxLog.overwrite(spark, sink, sized)
+                graft.sources.TxLog.overwrite(spark, sink, filtered)
               else
-                graft.sources.TxLog.replaceWhereIn(spark, sink, sized, t.partitionBy.head)
+                graft.sources.TxLog.replaceWhereIn(spark, sink, filtered, t.partitionBy.head)
             committedVersions.put(t.name, v): Unit
           } else {
-            val writer = sized.write.mode("overwrite")
+            val writer = filtered.write.mode("overwrite")
             if (t.partitionBy.nonEmpty)
               writer.option("partitionOverwriteMode", "dynamic")
                 .partitionBy(t.partitionBy: _*).parquet(sink)
@@ -202,16 +209,18 @@ object PipelineGraph {
           // columns come back type-inferred (a string day becomes DATE) and
           // relocated to the end — downstream nodes would see a different
           // schema than this node produced.
-          def reread() =
+          def reread() = graft.sources.SmallTable.onePartition(
             if (transactionalSinks) graft.sources.TxLog.read(spark, sink)
             else if (t.partitionBy.isEmpty) spark.read.parquet(sink)
-            else spark.read.schema(filtered.schema).parquet(sink)
-          val got = obs.get
-          val total = got("rows").asInstanceOf[Long]
-          metrics.put(t.name, t.expectations.map { e =>
-            val failed = got(s"exp_${e.name}") match { case null => 0L; case x => x.asInstanceOf[Long] }
-            ExpectationResult(t.name, e.name, e.mode.label, total - failed, failed)
-          })
+            else spark.read.schema(filtered.schema).parquet(sink))
+          obs.foreach { o =>
+            val got = o.get
+            val total = got("rows").asInstanceOf[Long]
+            metrics.put(t.name, t.expectations.map { e =>
+              val failed = got(s"exp_${e.name}") match { case null => 0L; case x => x.asInstanceOf[Long] }
+              ExpectationResult(t.name, e.name, e.mode.label, total - failed, failed)
+            })
+          }
           reread()
         }
       out.createOrReplaceTempView(t.name)
@@ -219,7 +228,7 @@ object PipelineGraph {
       out
     }
 
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(parallelism, 1))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(Parallelism)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val futures = scala.collection.mutable.Map.empty[String, Future[DataFrame]]

@@ -123,21 +123,24 @@ object TxPublish {
   /** Read `table` at the version pinned by `runAsOf` (default latest
     * run). Resolve [[manifest]] ONCE and reuse it across tables when a
     * consistent multi-table view matters — that single resolution is the
-    * isolation boundary. */
+    * isolation boundary. A small table comes back on one partition
+    * ([[SmallTable.onePartition]]), so a dashboard query over it plans no
+    * shuffle. */
   def readTable(spark: SparkSession, root: String, table: String,
       runAsOf: Option[Long] = None): DataFrame = {
     val m = manifest(root, runAsOf)
     val v = m.tables.getOrElse(table,
       throw new NoPublishedRunException(
         s"table $table not in run ${m.run} of $root (has: ${m.tables.keys.toSeq.sorted.mkString(", ")})"))
-    TxLog.read(spark, s"$root/$table", Some(v))
+    SmallTable.onePartition(TxLog.read(spark, s"$root/$table", Some(v)))
   }
 
   /** Every table of one run as a consistent map — the all-old-or-all-new
-    * read path for dashboards: one manifest resolution pins them all. */
+    * read path for dashboards: one manifest resolution pins them all.
+    * Small tables come back on one partition, as in [[readTable]]. */
   def readRun(spark: SparkSession, root: String,
       runAsOf: Option[Long] = None): Map[String, DataFrame] = {
     val m = manifest(root, runAsOf)
-    m.tables.map { case (n, v) => n -> TxLog.read(spark, s"$root/$n", Some(v)) }
+    m.tables.map { case (n, v) => n -> SmallTable.onePartition(TxLog.read(spark, s"$root/$n", Some(v))) }
   }
 }

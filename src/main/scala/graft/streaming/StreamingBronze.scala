@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, regexp_extract}
 import org.apache.spark.sql.streaming.Trigger
 import graft.pipeline.{DiabetesPipeline, PipelineGraph, PipelineResult, RunContext}
+import graft.sources.SmallTable
 
 /** Streaming bronze ingest — the Auto-Loader-shaped path (SURVEY.md §2.1
   * S1/S2, §2.9; diabetes_etl_pipeline.py:62-73): incremental CSV file
@@ -22,7 +23,8 @@ import graft.pipeline.{DiabetesPipeline, PipelineGraph, PipelineResult, RunConte
 object StreamingBronze {
 
   /** Run one AvailableNow ingest pass; returns the batch re-read of the
-    * accumulated sink (S5 — the `diabetes_bronze_materialized` input).
+    * accumulated sink (S5 — the `diabetes_bronze_materialized` input), on
+    * one partition while the sink is small ([[SmallTable.onePartition]]).
     *
     * `maxFilesPerTrigger` bounds each micro-batch's file count — the
     * backfill rate-control knob: an AvailableNow pass over a large
@@ -53,7 +55,7 @@ object StreamingBronze {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(sinkDir)
+    SmallTable.onePartition(spark.read.parquet(sinkDir))
   }
 
   /** Sink handler for [[ingestForeachBatch]], public so the replay
@@ -78,7 +80,8 @@ object StreamingBronze {
     * receives (batch DataFrame, batchId). Delivery is at-least-once;
     * idempotence comes from [[writeBatchIdempotent]] (per-batch partition
     * overwrite), NOT from the checkpoint alone. Downstream identical to
-    * [[ingest]] plus the `batch_id` provenance partition column. */
+    * [[ingest]] plus the `batch_id` provenance partition column; the sink
+    * read is planned on one partition while small, as in [[ingest]]. */
   def ingestForeachBatch(spark: SparkSession, rawDir: String, sinkDir: String,
       checkpointDir: String, rc: RunContext): DataFrame = {
     val stream = spark.readStream
@@ -99,7 +102,7 @@ object StreamingBronze {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(sinkDir)
+    SmallTable.onePartition(spark.read.parquet(sinkDir))
   }
 
   /** Manifest-mode ingest — the 100M-file answer to [[ingest]]'s one
@@ -126,7 +129,8 @@ object StreamingBronze {
     *
     * Rows carry `source_file` provenance (S2) exactly like the
     * directory-scan path. Returns the accumulated sink (empty-schema
-    * read guarded for the nothing-ever-ingested case). */
+    * read guarded for the nothing-ever-ingested case), on one partition
+    * while small, as in [[ingest]]. */
   def ingestManifest(spark: SparkSession, manifestDir: String,
       sinkDir: String, checkpointDir: String,
       schema: org.apache.spark.sql.types.StructType,
@@ -152,7 +156,7 @@ object StreamingBronze {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    if (new java.io.File(sinkDir).exists()) spark.read.parquet(sinkDir)
+    if (new java.io.File(sinkDir).exists()) SmallTable.onePartition(spark.read.parquet(sinkDir))
     else spark.emptyDataFrame
   }
 

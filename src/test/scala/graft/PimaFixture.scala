@@ -16,11 +16,12 @@ object PimaFixture {
   /** Rows with a NULL `file_name`: bronze's `valid_file` drop fails. */
   def badFile(id: Long): Boolean = id % 13 == 5
 
-  def bronze(spark: SparkSession, n: Int): DataFrame = {
+  /** `n` rows in `files` parquet files (one by default). */
+  def bronze(spark: SparkSession, n: Int, files: Int = 1): DataFrame = {
     val rc = RunContext.golden
     val id = col("id")
     val dir = Scratch.dir("graft-pima").toString + "/bronze"
-    spark.range(n).select(
+    spark.range(0, n, 1, files).select(
       (id % 11).cast("int").as("Pregnancies"),
       when(id % 13 === 0, 0).otherwise(id * 37 % 140 + 60).cast("int").as("Glucose"),
       when(id % 17 === 0, 0).otherwise(id * 11 % 70 + 40).cast("int").as("BloodPressure"),
@@ -34,7 +35,7 @@ object PimaFixture {
       lit("file:/landing/pima_0.csv").as("source_file"),
       rc.today.as("ingestion_date"),
       when(id % 13 === 5, lit(null).cast("string")).otherwise(lit("pima_0")).as("file_name"))
-      .coalesce(1).write.parquet(dir)
+      .write.parquet(dir)
     spark.read.parquet(dir)
   }
 }
