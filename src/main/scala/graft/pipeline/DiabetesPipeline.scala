@@ -42,7 +42,9 @@ object DiabetesPipeline {
     StructField("Outcome", IntegerType, nullable = true)))
 
   /** Default corpus: the reference's own shipped CSV shards (read-only;
-    * public Pima-Indians data). Overridable for streaming/golden tests. */
+    * public Pima-Indians data). A fixed path, not a setting: a run reads
+    * another corpus through the `dataDir` parameter of [[run]],
+    * [[cachedRun]] and [[bronzeBatch]] (e.g. one written by [[PimaCorpus]]). */
   val defaultDataDir = "/root/reference/data"
 
   // ---- node builders (each cites its reference definition) -------------

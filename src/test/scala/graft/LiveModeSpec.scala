@@ -16,7 +16,7 @@ class LiveModeSpec extends AnyFunSuite with SparkTestBase {
   test("full DAG with RunContext.live: counts, non-null clocks, well-formed uuid") {
     val work = graft.Scratch.dir("graft-live").toString
     val res = DiabetesPipeline.run(
-      spark, DiabetesPipeline.defaultDataDir, work, RunContext.live)
+      spark, PimaFixture.csvDir, work, RunContext.live)
 
     // Row counts match the frozen run's invariants (clock-independent).
     assert(res("diabetes_silver").count() === 768)
@@ -39,7 +39,7 @@ class LiveModeSpec extends AnyFunSuite with SparkTestBase {
     assert(id1.matches("[0-9a-f]{8}-[0-9a-f]{4}-4[0-9a-f]{3}-[0-9a-f]{4}-[0-9a-f]{12}"), id1)
     val work2 = graft.Scratch.dir("graft-live2").toString
     val res2 = DiabetesPipeline.run(
-      spark, DiabetesPipeline.defaultDataDir, work2, RunContext.live)
+      spark, PimaFixture.csvDir, work2, RunContext.live)
     val id2 = res2("dashboard_refresh_log").select("pipeline_run_id").head().getString(0)
     assert(id1 != id2, "uuid() must differ across live runs")
 

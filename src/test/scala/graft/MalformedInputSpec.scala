@@ -14,7 +14,7 @@ class MalformedInputSpec extends AnyFunSuite with SparkTestBase {
 
   test("corrupt rows become NULLs, survive silver, and surface in metrics") {
     val raw = graft.Scratch.dir("graft-malformed")
-    Files.copy(Paths.get(s"${DiabetesPipeline.defaultDataDir}/diabetes_part_1.csv"),
+    Files.copy(Paths.get(s"${PimaFixture.csvDir}/diabetes_part_1.csv"),
       raw.resolve("diabetes_part_1.csv"), StandardCopyOption.REPLACE_EXISTING)
     Files.writeString(raw.resolve("bad.csv"),
       """Pregnancies,Glucose,BloodPressure,SkinThickness,Insulin,BMI,DiabetesPedigreeFunction,Age,Outcome

@@ -1,14 +1,50 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.RunContext
+import graft.pipeline.{DiabetesPipeline, PimaCorpus, RunContext}
 
-/** Deterministic bronze-schema Pima rows for DAG-level specs, read back
-  * from parquet as the streaming ingest's sink is. Zero rates fire every
-  * silver imputation; the bad rows are known by construction. */
+/** Deterministic Pima inputs for DAG-level specs: bronze-schema rows read
+  * back from parquet as the streaming ingest's sink is (zero rates fire
+  * every silver imputation; the bad rows are known by construction), and
+  * a CSV corpus in the reference's shard layout. */
 object PimaFixture {
+
+  /** Shards and data rows per shard of the reference corpus (FIXTURES.md §A). */
+  private val Shards = 6
+  private val RowsPerShard = 128
+
+  /** A directory of `diabetes_part_{1..6}.csv`, 128 data rows each: the
+    * reference's own corpus (`DiabetesPipeline.defaultDataDir`) where it
+    * exists, else [[PimaCorpus]] shards at seed 7 written once per JVM
+    * under [[Scratch]]. For specs whose assertions hold on any corpus of
+    * that shape; golden literals of the real file stay with the
+    * reference path. Checked once: every shard has 128 rows, each of the
+    * five zero-coded measures has a zero (so silver imputes) and both
+    * Outcome classes occur. */
+  lazy val csvDir: String = {
+    val ref = Paths.get(DiabetesPipeline.defaultDataDir)
+    val dir =
+      if (Files.isDirectory(ref)) ref
+      else {
+        val d = Scratch.dir("graft-pima-csv")
+        PimaCorpus.write(d, seed = 7L, Shards, RowsPerShard)
+        d
+      }
+    val rows = (1 to Shards).flatMap { n =>
+      val body = Files.readAllLines(dir.resolve(s"diabetes_part_$n.csv")).asScala
+        .drop(1).filter(_.trim.nonEmpty)
+      require(body.size == RowsPerShard, s"$dir/diabetes_part_$n.csv: ${body.size} rows, want $RowsPerShard")
+      body.map(_.split(",").map(_.trim))
+    }
+    Seq("Glucose" -> 1, "BloodPressure" -> 2, "SkinThickness" -> 3, "Insulin" -> 4, "BMI" -> 5)
+      .foreach { case (c, i) => require(rows.exists(_(i).toDoubleOption.contains(0.0)), s"$dir: no zero $c") }
+    require(rows.map(_(8)).toSet == Set("0", "1"), s"$dir: Outcome lacks a class")
+    dir.toString
+  }
 
   /** Rows whose Age is 0: silver's `valid_age` warn fails on them. */
   def badAge(id: Long): Boolean = id % 9 == 0

@@ -22,11 +22,11 @@ class SinkContractSpec extends AnyFunSuite with SparkTestBase {
   test("running the diabetes DAG twice into one workDir leaves gold identical") {
     val work = graft.Scratch.dir("graft-idem").toString
     val rc = RunContext.golden
-    val first = DiabetesPipeline.run(spark, DiabetesPipeline.defaultDataDir, work, rc)
+    val first = DiabetesPipeline.run(spark, PimaFixture.csvDir, work, rc)
     val snap = Seq("diabetes_demographics_summary", "diabetes_risk_analysis",
       "data_validation_summary").map(t => t -> first(t).collect().map(_.toString).sorted).toMap
 
-    val second = DiabetesPipeline.run(spark, DiabetesPipeline.defaultDataDir, work, rc)
+    val second = DiabetesPipeline.run(spark, PimaFixture.csvDir, work, rc)
     snap.foreach { case (t, rows) =>
       assert(second(t).collect().map(_.toString).sorted.sameElements(rows), t)
     }

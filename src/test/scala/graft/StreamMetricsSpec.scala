@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.{DiabetesPipeline, RunContext}
+import graft.pipeline.RunContext
 import graft.streaming.{StreamMetrics, StreamingBronze}
 
 /** The streaming metrics listener must record every micro-batch with its
@@ -12,7 +12,7 @@ class StreamMetricsSpec extends AnyFunSuite with SparkTestBase {
 
   test("listener records AvailableNow batches with correct input rows") {
     val raw = graft.Scratch.dir("graft-met-raw")
-    val src = Paths.get(DiabetesPipeline.defaultDataDir)
+    val src = Paths.get(PimaFixture.csvDir)
     (1 to 6).foreach { n =>
       Files.copy(src.resolve(s"diabetes_part_$n.csv"),
         raw.resolve(s"diabetes_part_$n.csv"), StandardCopyOption.REPLACE_EXISTING)
@@ -38,7 +38,7 @@ class StreamMetricsSpec extends AnyFunSuite with SparkTestBase {
 
   test("maxFilesPerTrigger: AvailableNow backfill processes bounded multi-batches, same result") {
     val raw = graft.Scratch.dir("graft-rate-raw")
-    val src = Paths.get(DiabetesPipeline.defaultDataDir)
+    val src = Paths.get(PimaFixture.csvDir)
     (1 to 6).foreach { n =>
       Files.copy(src.resolve(s"diabetes_part_$n.csv"),
         raw.resolve(s"diabetes_part_$n.csv"), StandardCopyOption.REPLACE_EXISTING)

@@ -11,7 +11,7 @@ import graft.streaming.StreamingBronze
   * and re-running with no new files ingests nothing (exactly-once). */
 class StreamingBronzeSpec extends AnyFunSuite with SparkTestBase {
 
-  private val srcDir = Paths.get(DiabetesPipeline.defaultDataDir)
+  private lazy val srcDir = Paths.get(PimaFixture.csvDir)
   private def copyShard(raw: Path, n: Int): Unit =
     Files.copy(srcDir.resolve(s"diabetes_part_$n.csv"),
       raw.resolve(s"diabetes_part_$n.csv"), StandardCopyOption.REPLACE_EXISTING)
@@ -59,7 +59,7 @@ class StreamingBronzeSpec extends AnyFunSuite with SparkTestBase {
     // Full DAG over the streamed bronze ≡ batch DAG over all six shards
     // (path-free tables; the frozen clock makes them exactly equal).
     val streamed = StreamingBronze.runPipeline(spark, raw.toString, work, rc)
-    val batch = DiabetesPipeline.cachedRun(spark)
+    val batch = DiabetesPipeline.cachedRun(spark, srcDir.toString)
     Seq("diabetes_demographics_summary", "diabetes_risk_analysis",
       "diabetes_executive_summary", "data_validation_summary").foreach { t =>
       val a = streamed(t).collect().map(_.toString).sorted
