@@ -51,14 +51,19 @@ object DiabetesPipeline {
 
   /** Bronze ingest, batch flavor — diabetes_etl_pipeline.py:46-74. The
     * streaming flavor (readStream + AvailableNow) is in
-    * [[StreamingBronze]]; both produce this exact schema. */
+    * [[graft.streaming.StreamingBronze]]; both produce this exact schema. */
   def bronzeBatch(spark: SparkSession, dataDir: String, rc: RunContext): DataFrame =
-    spark.read
+    withProvenance(spark.read
       .format("csv")
       .option("header", "true")
       .option("inferSchema", "false")
       .schema(diabetesSchema)
-      .load(dataDir)
+      .load(dataDir), rc)
+
+  /** Bronze's provenance columns over a CSV file read, batch or stream
+    * (diabetes_etl_pipeline.py:62-73). */
+  def withProvenance(csv: DataFrame, rc: RunContext): DataFrame =
+    csv
       .withColumn("ingestion_timestamp", rc.now)
       .withColumn("source_file", col("_metadata.file_path"))
       .withColumn("ingestion_date", rc.today)

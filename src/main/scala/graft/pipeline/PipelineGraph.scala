@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.{SmallTable, TxLog}
 
 /** Row-level data-quality expectation, replacing the reference's DLT
   * decorators (SURVEY.md §2.2 P5/P6):
@@ -27,6 +29,34 @@ object Expectation {
 final case class ExpectationResult(
     table: String, expectation: String, mode: String,
     passedCount: Long, failedCount: Long)
+
+/** Rows a node's expectations saw and each one's failures (by name),
+  * over one pass or summed over several. */
+private[pipeline] final case class ExpectationCounts(rows: Long, failed: Map[String, Long]) {
+  def +(o: ExpectationCounts): ExpectationCounts =
+    ExpectationCounts(rows + o.rows, failed.map { case (k, n) => k -> (n + o.failed.getOrElse(k, 0L)) })
+
+  def results(table: String, es: Seq[Expectation]): Seq[ExpectationResult] =
+    es.map(e => ExpectationResult(table, e.name, e.mode.label, rows - failed(e.name), failed(e.name)))
+}
+
+private[pipeline] object ExpectationCounts {
+  def zero(es: Seq[Expectation]): ExpectationCounts = ExpectationCounts(0L, es.map(_.name -> 0L).toMap)
+
+  /** The counting aggregates: a row count plus one
+    * `sum(when(!pred, 1))` per expectation (a NULL verdict fails).
+    * Expectation metrics are prefixed exp_ so an expectation named
+    * "rows" cannot collide with the row count. */
+  def columns(es: Seq[Expectation]): Seq[Column] =
+    count(lit(1)).as("rows") +:
+      es.map(e => sum(when(expr(e.predicate), 0L).otherwise(1L)).as(s"exp_${e.name}"))
+
+  /** The counts from the values of [[columns]], by column name. */
+  def of(es: Seq[Expectation], m: Map[String, Any]): ExpectationCounts =
+    ExpectationCounts(m("rows").asInstanceOf[Long], es.map { e =>
+      e.name -> (m(s"exp_${e.name}") match { case null => 0L; case x => x.asInstanceOf[Long] })
+    }.toMap)
+}
 
 /** One node of a medallion pipeline: the Scala-native replacement for a
   * `@dlt.table` / `@dlt.view` declaration (SURVEY.md §1.1). `build`
@@ -80,7 +110,9 @@ object PipelineResult {
   *     write, no extra scan even at 100 TB), filter Drop-mode violations,
   *     write the parquet sink, then re-read the sink so downstream nodes
   *     consume the materialized table exactly like `dlt.read` (S3/S5) —
-  *     on one partition when the table is small (see [[run]]).
+  *     on one partition when the table is small (see [[run]]). With
+  *     transactional sinks, a node that only reads a TxLog table commits
+  *     that table's new files instead ([[Mirror]]).
   *  3. Per view node: no materialization, just registration (S4).
   *
   * Scale: each node is one Spark job over declarative DataFrames —
@@ -132,7 +164,11 @@ object PipelineGraph {
     * = replaceWhereIn on the partition column), so a crashed run never
     * leaves a half-written table, every previous run stays readable via
     * time travel, and concurrent readers are snapshot-isolated.
-    * Single-column partitionBy only in this mode.
+    * Single-column partitionBy only in this mode. An unpartitioned node
+    * whose build is a bare read of a TxLog table ([[TxLog.readSource]])
+    * is refreshed as a [[Mirror]] of that table: only the files it added
+    * since the last mirrored version are committed, by hard link, and
+    * its expectation counts stay cumulative.
     *
     * `publishRun` (requires `transactionalSinks`): after EVERY table
     * node's TxLog commit has landed, publish one
@@ -156,6 +192,23 @@ object PipelineGraph {
     val reader: PipelineResult.Reader = name =>
       results.getOrElse(name, sys.error(s"unknown upstream table: $name"))
 
+    // Violation counts observed in the same pass as the sink write. A node
+    // without expectations observes nothing: its metrics would go unread.
+    // Returns the frame to write (Drop-mode violations filtered out) and
+    // the counts, readable once it is written.
+    def observeAndDrop(t: TableDef, built: DataFrame): (DataFrame, () => ExpectationCounts) = {
+      val obs = Option.when(t.expectations.nonEmpty)(
+        Observation(s"${t.name}_expectations_${System.nanoTime()}"))
+      val observed = obs.fold(built) { o =>
+        val cols = ExpectationCounts.columns(t.expectations)
+        built.observe(o, cols.head, cols.tail: _*)
+      }
+      val filtered = t.expectations.filter(_.mode == Expectation.Drop)
+        .foldLeft(observed)((df, e) => df.filter(expr(e.predicate)))
+      (filtered, () => obs.fold(ExpectationCounts.zero(t.expectations))(o =>
+        ExpectationCounts.of(t.expectations, o.get)))
+    }
+
     def runNode(t: TableDef): DataFrame = try {
       runNodeInner(t)
     } catch {
@@ -170,77 +223,72 @@ object PipelineGraph {
       val out =
         if (t.isView) built
         else {
-          // Violation counts observed in the same pass as the sink write:
-          // one sum(when(!pred,1)) per expectation plus a row count. Metric
-          // names are prefixed exp_ so an expectation named "rows" cannot
-          // collide with the reserved row-count metric. A node without
-          // expectations observes nothing: its metrics would go unread.
           val expNames = t.expectations.map(_.name)
           require(expNames.distinct.size == expNames.size,
             s"${t.name}: duplicate expectation names: ${expNames.mkString(", ")}")
-          val obs = Option.when(t.expectations.nonEmpty)(
-            Observation(s"${t.name}_expectations_${System.nanoTime()}"))
-          val observed = obs.fold(built) { o =>
-            val metricCols = count(lit(1)).as("rows") +:
-              t.expectations.map(e =>
-                sum(when(expr(e.predicate), 0L).otherwise(1L)).as(s"exp_${e.name}"))
-            built.observe(o, metricCols.head, metricCols.tail: _*)
-          }
-          val dropPreds = t.expectations.filter(_.mode == Expectation.Drop)
-          val filtered = dropPreds.foldLeft(observed)((df, e) => df.filter(expr(e.predicate)))
           val sink = s"$workDir/${t.name}"
-          if (transactionalSinks) {
-            require(t.partitionBy.size <= 1,
-              s"${t.name}: transactional sinks support at most one partition column")
-            val v =
-              if (t.partitionBy.isEmpty)
-                graft.sources.TxLog.overwrite(spark, sink, filtered)
-              else
-                graft.sources.TxLog.replaceWhereIn(spark, sink, filtered, t.partitionBy.head)
-            committedVersions.put(t.name, v): Unit
-          } else {
-            val writer = filtered.write.mode("overwrite")
-            if (t.partitionBy.nonEmpty)
-              writer.option("partitionOverwriteMode", "dynamic")
-                .partitionBy(t.partitionBy: _*).parquet(sink)
-            else writer.parquet(sink)
-          }
+          val counts =
+            if (transactionalSinks) {
+              require(t.partitionBy.size <= 1,
+                s"${t.name}: transactional sinks support at most one partition column")
+              val source = if (t.partitionBy.isEmpty) TxLog.readSource(built) else None
+              val (v, c) = source.flatMap(Mirror.refresh(spark, t, sink, _)).getOrElse {
+                val (filtered, observed) = observeAndDrop(t, built)
+                val v = source match {
+                  case Some(s) =>
+                    TxLog.overwriteAt(spark, sink, filtered, TxLog.latestVersion(sink),
+                      Some((Mirror.appId(s), s.version)), () => Mirror.props(t.expectations, observed()))
+                  case None if t.partitionBy.isEmpty => TxLog.overwrite(spark, sink, filtered)
+                  case None => TxLog.replaceWhereIn(spark, sink, filtered, t.partitionBy.head)
+                }
+                (v, observed())
+              }
+              committedVersions.put(t.name, v): Unit
+              c
+            } else {
+              val (filtered, observed) = observeAndDrop(t, built)
+              val writer = filtered.write.mode("overwrite")
+              if (t.partitionBy.nonEmpty)
+                writer.option("partitionOverwriteMode", "dynamic")
+                  .partitionBy(t.partitionBy: _*).parquet(sink)
+              else writer.parquet(sink)
+              observed()
+            }
+          if (t.expectations.nonEmpty) metrics.put(t.name, counts.results(t.name, t.expectations))
           // Partitioned re-read pins the BUILD's schema: otherwise partition
           // columns come back type-inferred (a string day becomes DATE) and
           // relocated to the end — downstream nodes would see a different
           // schema than this node produced.
-          def reread() = graft.sources.SmallTable.onePartition(
-            if (transactionalSinks) graft.sources.TxLog.read(spark, sink)
+          SmallTable.onePartition(
+            if (transactionalSinks) TxLog.read(spark, sink)
             else if (t.partitionBy.isEmpty) spark.read.parquet(sink)
-            else spark.read.schema(filtered.schema).parquet(sink))
-          obs.foreach { o =>
-            val got = o.get
-            val total = got("rows").asInstanceOf[Long]
-            metrics.put(t.name, t.expectations.map { e =>
-              val failed = got(s"exp_${e.name}") match { case null => 0L; case x => x.asInstanceOf[Long] }
-              ExpectationResult(t.name, e.name, e.mode.label, total - failed, failed)
-            })
-          }
-          reread()
+            else spark.read.schema(built.schema).parquet(sink))
         }
       out.createOrReplaceTempView(t.name)
       results.put(t.name, out)
       out
     }
 
+    // Every node's future settles before the pool shuts down: a failed
+    // node fails its dependents without running them, but their futures
+    // still complete on the pool, which must accept those tasks. The
+    // first failure in topological order is the root one; a dependent's
+    // failure is the same exception.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(Parallelism)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
+    val settled = try {
       val futures = scala.collection.mutable.Map.empty[String, Future[DataFrame]]
       ordered.foreach { t =>
         val deps = Future.sequence(t.deps.map(futures))
         futures(t.name) = deps.map(_ => runNode(t))
       }
-      Await.result(Future.sequence(ordered.map(t => futures(t.name))), Duration.Inf)
+      Await.result(Future.sequence(ordered.map(t => futures(t.name).transform(scala.util.Success(_)))),
+        Duration.Inf)
     } finally pool.shutdown()
+    settled.foreach(_.failed.foreach(e => throw e))
 
     // The manifest goes out strictly AFTER every node's commit returned
-    // (the Await above is the barrier) — the all-or-nothing point.
+    // (the settled futures above are the barrier) — the all-or-nothing point.
     val run =
       if (publishRun && committedVersions.nonEmpty)
         Some(graft.sources.TxPublish.publish(workDir, committedVersions.toMap))

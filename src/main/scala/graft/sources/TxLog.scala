@@ -7,6 +7,8 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -2906,11 +2908,16 @@ object TxLog {
     * columns physically present), one hash repartition routes each
     * combination to exactly one task, the hive-style layout is
     * flattened back to the two-component `d-xxxx/file.parquet` form
-    * every path invariant relies on (file moves are metadata-only), and
-    * pv derives from the per-file STATS the write collects anyway —
-    * min==max is guaranteed by the aligned write, and stats canon keeps
-    * pv comparable with every other pruning string. NULL partition
-    * values are rejected after staging (zero extra passes over `df`). */
+    * every path invariant relies on (file moves are metadata-only). The
+    * duplicate holds the value URL-encoded, so the transient directories
+    * have ASCII names whatever the value and the JVM's filename encoding
+    * (a raw `été` is an invalid path where `sun.jnu.encoding` is ASCII);
+    * the encoding is injective, so each directory still holds one value.
+    * pv derives from the raw column's per-file STATS, which the write
+    * collects anyway — min==max is guaranteed by the aligned write, and
+    * stats canon keeps pv comparable with every other pruning string.
+    * NULL partition values are rejected after staging (zero extra
+    * passes over `df`). */
   private[graft] def stagePartitioned(spark: SparkSession, dir: String, df: DataFrame,
       physPartCols: Seq[String]): (String, Seq[AddFile]) = {
     physPartCols.foreach { c =>
@@ -2925,7 +2932,7 @@ object TxLog {
     val stagingDir = Paths.get(dir, sub)
     val dup = physPartCols.map(c => c -> s"__pb_$c")
     val written = writeStaged(dir, sub,
-      dup.foldLeft(df) { case (d, (c, p)) => d.withColumn(p, col(c)) }
+      dup.foldLeft(df) { case (d, (c, p)) => d.withColumn(p, url_encode(col(c).cast(StringType))) }
         .repartition(physPartCols.map(col): _*),
       dup.map(_._2))
     val moved = flattenStaged(stagingDir)
@@ -3156,7 +3163,8 @@ object TxLog {
     * zombie attempts of the same batch cannot both land: the loser's
     * rebase re-reads the log, sees the winner's txn, and backs off.
     * Returns Some(version) when this call committed, None when the batch
-    * was already in the table.
+    * was already in the table. `props` are table properties set by the
+    * same commit.
     *
     * CAVEAT (shared with Delta's txn action): the guard assumes a given
     * batchId always carries the SAME content. If the stream's checkpoint
@@ -3170,7 +3178,8 @@ object TxLog {
     * source whose batchId→content mapping is durable (e.g. the manifest
     * ledger, where a batch is a fixed set of ledger rows). */
   def appendBatch(spark: SparkSession, dir: String, df: DataFrame,
-      appId: String, batchId: Long): Option[Long] = {
+      appId: String, batchId: Long,
+      props: Map[String, String] = Map.empty): Option[Long] = {
     Files.createDirectories(Paths.get(dir))
     def seen(h: Option[Snapshot]): Boolean =
       h.exists(_.txns.get(appId).exists(_ >= batchId))
@@ -3226,14 +3235,14 @@ object TxLog {
         }
         val attempt = head.map(_.version + 1).getOrElse(0L)
         val nRows = adds.map(_.rows).sum
-        val idProps: Option[Map[String, String]] =
-          if (idSpecs.isEmpty || nRows == 0L) None
-          else Some(idSpecs.map { case (c, sp) =>
+        val idProps: Map[String, String] =
+          if (idSpecs.isEmpty || nRows == 0L) Map.empty
+          else idSpecs.map { case (c, sp) =>
             Identity.HighWater + c -> (hw(c) + sp.step * nRows).toString
-          })
+          }
         val content = commitJson(attempt, "streamingAppend", System.currentTimeMillis(),
           adds, Nil, if (attempt == 0L) Some(ddl) else None, Some((appId, batchId)),
-          idProps)
+          Option.when(props.nonEmpty || idProps.nonEmpty)(props ++ idProps))
         if (tryPublish(dir, attempt, content)) {
           published = true
           maybeCheckpoint(dir, attempt)
@@ -3338,9 +3347,13 @@ object TxLog {
     overwriteAt(spark, dir, df, latestVersion(dir))
 
   /** [[overwrite]] with the read version explicit — the seam the race
-    * test uses to interleave a foreign commit between read and publish. */
+    * test uses to interleave a foreign commit between read and publish.
+    * The commit also records `txn` and sets the table properties
+    * `props()`, evaluated once `df` is staged (so they may read metrics
+    * its write observed). */
   private[graft] def overwriteAt(spark: SparkSession, dir: String, df: DataFrame,
-      readVersion: Long): Long = {
+      readVersion: Long, txn: Option[(String, Long)] = None,
+      props: () => Map[String, String] = () => Map.empty): Long = {
     Files.createDirectories(Paths.get(dir))
     // meta resolution + distributed remove-list discovery: a Complete-
     // mode streaming sink overwrites every batch — it must not fold a
@@ -3369,9 +3382,10 @@ object TxLog {
       case None => (None, Nil)
     }
     val v = readVersion + 1
+    val newProps = props()
     val content = commitJson(v, "overwrite", System.currentTimeMillis(),
       adds, removes, if (v == 0L) Some(df0.schema.toDDL) else None,
-      cdf = cdfAdds)
+      txn, Option.when(newProps.nonEmpty)(newProps), cdf = cdfAdds)
     if (tryPublish(dir, v, content)) { maybeCheckpoint(dir, v); v }
     else {
       deleteStaged(dir, sub)
@@ -5613,15 +5627,9 @@ object TxLog {
     if (latestVersion(dstDir) >= 0)
       throw new TableExistsException(s"$dstDir already has a committed log")
     Files.createDirectories(Paths.get(dstDir))
-    def link(rel: String): Unit = {
-      val to = Paths.get(dstDir, rel)
-      Files.createDirectories(to.getParent)
-      try Files.createLink(to, Paths.get(srcDir, rel)): Unit
-      catch { case _: FileAlreadyExistsException => () } // re-run after a crash
-    }
-    snap.files.foreach(f => link(f.path))
+    snap.files.foreach(f => linkFile(srcDir, dstDir, f.path))
     snap.files.flatMap(_.dv.map(_.path)).distinct.foreach { dvDir =>
-      listStaged(srcDir, dvDir).foreach(n => link(s"$dvDir/$n"))
+      listStaged(srcDir, dvDir).foreach(n => linkFile(srcDir, dstDir, s"$dvDir/$n"))
     }
     // bloom sidecars travel with their files (advisory — a missing one
     // just skips less; the links keep bytes alive across source VACUUM)
@@ -5641,6 +5649,63 @@ object TxLog {
     if (tryPublish(dstDir, 0L, content)) 0L
     else throw new TableExistsException(
       s"$dstDir was created concurrently; clone aborted")
+  }
+
+  /** Hard-link `srcDir/rel` to `dstDir/rel`; an existing link (a re-run
+    * after a crash) is kept. */
+  private def linkFile(srcDir: String, dstDir: String, rel: String): Unit = {
+    val to = Paths.get(dstDir, rel)
+    Files.createDirectories(to.getParent)
+    try Files.createLink(to, Paths.get(srcDir, rel)): Unit
+    catch { case _: FileAlreadyExistsException => () }
+  }
+
+  /** Whether files of `src` can join `dst` by reference
+    * ([[appendLinked]]): both tables store columns under their logical
+    * names, `dst` (when it exists) has `src`'s schema, no partition
+    * columns and no column that a write must check or fill (CHECK
+    * constraints, identity and generated columns). */
+  def linkable(src: Snapshot, dst: Option[Snapshot]): Boolean = {
+    def plain(s: Snapshot) = physicalSchema(s) == s.schema
+    def fields(s: Snapshot) = s.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    plain(src) && dst.forall { d =>
+      plain(d) && fields(d) == fields(src) && partitionColsOf(d).isEmpty &&
+        identityColsOf(d.props).isEmpty && generatedColsOf(d.props).isEmpty &&
+        !d.props.exists { case (k, v) => k.startsWith(ConstraintPrefix) && v.nonEmpty }
+    }
+  }
+
+  /** Append `files` of the table at `srcDir` to the table at `dir` by
+    * reference: each is hard-linked to the same relative path, as
+    * [[shallowClone]] links, and committed with its stats — no data is
+    * read or written. The commit records `(appId, batchId)` as its txn,
+    * as [[appendBatch]] does, so a replayed batch commits nothing and
+    * returns None. `props` ride the same commit. Creates the table, with
+    * schema `ddl`, when it has no log. The caller checks
+    * [[linkable]]. */
+  def appendLinked(srcDir: String, dir: String, ddl: String, files: Seq[AddFile],
+      appId: String, batchId: Long, props: Map[String, String] = Map.empty): Option[Long] = {
+    Files.createDirectories(Paths.get(dir))
+    files.foreach(f => linkFile(srcDir, dir, f.path))
+    val want = StructType.fromDDL(ddl).fields.map(f => (f.name, f.dataType)).toSeq
+    var tries = 0
+    while (tries < maxCommitAttempts) {
+      val head = headSnapshot(dir)
+      if (head.exists(_.txns.get(appId).exists(_ >= batchId))) return None
+      head.foreach { h =>
+        val got = h.schema.fields.map(f => (f.name, f.dataType)).toSeq
+        if (got != want)
+          throw new SchemaMismatchException(s"table schema ${got.mkString(",")} != linked ${want.mkString(",")}")
+      }
+      val v = head.map(_.version + 1).getOrElse(0L)
+      val content = commitJson(v, "appendLinked", System.currentTimeMillis(),
+        files.map(_.copy(dataChange = true)), Nil, Option.when(v == 0L)(ddl),
+        Some((appId, batchId)), Option.when(props.nonEmpty)(props))
+      if (tryPublish(dir, v, content)) { maybeCheckpoint(dir, v); return Some(v) }
+      tries += 1
+    }
+    throw new ConcurrentWriteException(
+      s"appendLinked to $dir lost $maxCommitAttempts consecutive commit races")
   }
 
   /** RENAME TABLE: one directory move (atomic on a posix filesystem —
@@ -6905,9 +6970,33 @@ object TxLog {
     }
   }
 
+  /** The files the commits `(fromExclusive, toInclusive]` added, when
+    * every one of them only appended: no remove, no schema change, no
+    * rewrite (`dataChange=false`) and no deletion vector. None when any
+    * commit did more, or when log cleanup removed part of the range —
+    * the caller then cannot extend a copy of `fromExclusive` to
+    * `toInclusive` by these files alone. */
+  def appendedFilesBetween(dir: String, fromExclusive: Long,
+      toInclusive: Long): Option[Seq[AddFile]] = {
+    val have = listLog(dir)._1.toSet
+    val range = (fromExclusive + 1) to toInclusive
+    if (!range.forall(have)) return None
+    val perCommit = range.map { v =>
+      val j = parse(Files.readString(versionFile(dir, v)))
+      val adds = parseAdds(j \ "adds")
+      val appendOnly = ((j \ "removes") match {
+          case JArray(rs) => rs.isEmpty
+          case _ => true
+        }) && (v == 0L || jStrOpt(j \ "schema").isEmpty) &&
+        adds.forall(a => a.dataChange && a.dv.isEmpty)
+      Option.when(appendOnly)(adds)
+    }
+    if (perCommit.forall(_.nonEmpty)) Some(perCommit.flatten.flatten) else None
+  }
+
   /** DV-aware scan of a batch's AddFiles under `snap`'s schema/mapping —
     * the streaming source's entry ([[changedFilesBetween]]'s output). */
-  private[sources] def scanAdds(spark: SparkSession, dir: String,
+  private[graft] def scanAdds(spark: SparkSession, dir: String,
       snap: Snapshot, files: Seq[AddFile]): DataFrame =
     scanFiles(spark, dir, snap, files)
 
@@ -7096,13 +7185,36 @@ object TxLog {
 
   /** Read the table at `versionAsOf` (default: latest). File list comes
     * from the LOG (no directory listing); the schema is pinned from the
-    * log so empty tables and schema-only reads work without inference. */
+    * log so empty tables and schema-only reads work without inference.
+    * The frame is tagged with the table and the version it reads
+    * ([[readSource]]). */
   def read(spark: SparkSession, dir: String, versionAsOf: Option[Long] = None): DataFrame = {
     val snap = snapshot(dir, versionAsOf)
-    if (snap.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    else
-      scanFiles(spark, dir, snap, snap.files)
+    val df =
+      if (snap.files.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
+      else
+        scanFiles(spark, dir, snap, snap.files)
+    df.queryExecution.analyzed.setTagValue(ReadTag, ReadSource(dir, snap.version))
+    df
+  }
+
+  /** The table directory and version a [[read]] frame reads. */
+  final case class ReadSource(dir: String, version: Long)
+
+  private val ReadTag = TreeNodeTag[ReadSource]("graft.txlog.read")
+
+  /** The table and version `df` reads when it is a bare [[read]]: the
+    * read itself, or the read coalesced (as
+    * [[SmallTable.onePartition]] plans it), which holds the same rows.
+    * None for any other frame — a projection, filter or join of a read
+    * included. */
+  def readSource(df: DataFrame): Option[ReadSource] = {
+    def bare(p: LogicalPlan): LogicalPlan = p match {
+      case Repartition(_, false, child) => bare(child)
+      case other => other
+    }
+    bare(df.queryExecution.analyzed).getTagValue(ReadTag)
   }
 
   /** Stats-canon comparator: numeric types as BigDecimal, date/

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, regexp_extract}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.Trigger
 import graft.pipeline.{DiabetesPipeline, PipelineGraph, PipelineResult, RunContext}
-import graft.sources.SmallTable
+import graft.sources.{SmallTable, TxLog}
 
 /** Streaming bronze ingest — the Auto-Loader-shaped path (SURVEY.md §2.1
   * S1/S2, §2.9; diabetes_etl_pipeline.py:62-73): incremental CSV file
@@ -17,14 +17,19 @@ import graft.sources.SmallTable
   *
   * Scale: the file-source maintains a file log in the checkpoint; each
   * micro-batch is a plain distributed CSV scan (same plan as the batch
-  * flavor), and the parquet sink append is partition-parallel. Nothing
+  * flavor), and the sink's staged write is partition-parallel. Nothing
   * passes through the driver.
   */
 object StreamingBronze {
 
-  /** Run one AvailableNow ingest pass; returns the batch re-read of the
-    * accumulated sink (S5 — the `diabetes_bronze_materialized` input), on
-    * one partition while the sink is small ([[SmallTable.onePartition]]).
+  /** Run one AvailableNow ingest pass into the [[TxLog]] table at
+    * `sinkDir` ([[StreamingTx]]'s exactly-once append: each micro-batch
+    * is one commit whose txn pairs the checkpoint's persistent query id
+    * with the batch id). Returns the table's read (S5 — the
+    * `diabetes_bronze_materialized` input), on one partition while it
+    * is small ([[SmallTable.onePartition]]). A transactional
+    * [[PipelineGraph]] node built from that read mirrors the table's new
+    * files instead of copying it.
     *
     * `maxFilesPerTrigger` bounds each micro-batch's file count — the
     * backfill rate-control knob: an AvailableNow pass over a large
@@ -35,27 +40,10 @@ object StreamingBronze {
   def ingest(spark: SparkSession, rawDir: String, sinkDir: String,
       checkpointDir: String, rc: RunContext,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream
-      .format("csv")
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .schema(DiabetesPipeline.diabetesSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader
-      .load(rawDir)
-      .withColumn("ingestion_timestamp", rc.now)
-      .withColumn("source_file", col("_metadata.file_path"))
-      .withColumn("ingestion_date", rc.today)
-      .withColumn("file_name", regexp_extract(col("_metadata.file_path"), "([^/]+)\\.csv$", 1))
-    val q = stream.writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    SmallTable.onePartition(spark.read.parquet(sinkDir))
+    val stream = DiabetesPipeline.withProvenance(
+      StreamingTx.csvStream(spark, rawDir, DiabetesPipeline.diabetesSchema, maxFilesPerTrigger), rc)
+    StreamingTx.appendStream(stream, sinkDir, checkpointDir, appId = None)
+    SmallTable.onePartition(TxLog.read(spark, sinkDir))
   }
 
   /** Sink handler for [[ingestForeachBatch]], public so the replay
@@ -84,16 +72,8 @@ object StreamingBronze {
     * read is planned on one partition while small, as in [[ingest]]. */
   def ingestForeachBatch(spark: SparkSession, rawDir: String, sinkDir: String,
       checkpointDir: String, rc: RunContext): DataFrame = {
-    val stream = spark.readStream
-      .format("csv")
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .schema(DiabetesPipeline.diabetesSchema)
-      .load(rawDir)
-      .withColumn("ingestion_timestamp", rc.now)
-      .withColumn("source_file", col("_metadata.file_path"))
-      .withColumn("ingestion_date", rc.today)
-      .withColumn("file_name", regexp_extract(col("_metadata.file_path"), "([^/]+)\\.csv$", 1))
+    val stream = DiabetesPipeline.withProvenance(
+      StreamingTx.csvStream(spark, rawDir, DiabetesPipeline.diabetesSchema, None), rc)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         writeBatchIdempotent(batch, batchId, sinkDir)

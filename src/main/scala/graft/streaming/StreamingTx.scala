@@ -37,6 +37,45 @@ import graft.sources.TxLog
   */
 object StreamingTx {
 
+  /** The file stream behind every CSV ingest: `rawDir`'s CSV files with
+    * a header row, read under an explicit `schema` (no inference), at
+    * most `maxFilesPerTrigger` files per micro-batch when set. */
+  private[streaming] def csvStream(spark: SparkSession, rawDir: String, schema: StructType,
+      maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val reader = spark.readStream
+      .format("csv")
+      .option("header", "true")
+      .option("inferSchema", "false")
+      .schema(schema)
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    reader.load(rawDir)
+  }
+
+  /** Run `stream` as one AvailableNow pass into the transactional table
+    * at `tableDir`: each micro-batch commits one table version tagged
+    * (appId, batchId) through [[TxLog.appendBatch]]. Without an `appId`
+    * the txn names the query's id, which the checkpoint persists: the
+    * same checkpoint always writes as the same app, and a rebuilt one as
+    * a new app. */
+  private[streaming] def appendStream(stream: DataFrame, tableDir: String,
+      checkpointDir: String, appId: Option[String]): Unit = {
+    val q = stream.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val s = batch.sparkSession
+        val app = appId.getOrElse(s.sparkContext.getLocalProperty(QueryIdKey))
+        require(app != null, s"no streaming query id for the batch into $tableDir")
+        TxLog.appendBatch(s, tableDir, batch, app, batchId): Unit
+      }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+  }
+
+  /** The local property a streaming query's micro-batches run under,
+    * holding its persistent id. */
+  private val QueryIdKey = "sql.streaming.queryId"
+
   /** One AvailableNow pass of `rawDir`'s CSV files into the
     * transactional table at `tableDir`; returns the table's post-pass
     * contents. Each micro-batch commits one table version tagged
@@ -44,21 +83,8 @@ object StreamingTx {
   def ingest(spark: SparkSession, rawDir: String, tableDir: String,
       checkpointDir: String, schema: StructType, appId: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream
-      .format("csv")
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val q = reader.load(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TxLog.appendBatch(batch.sparkSession, tableDir, batch, appId, batchId): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    appendStream(csvStream(spark, rawDir, schema, maxFilesPerTrigger), tableDir,
+      checkpointDir, Some(appId))
     TxLog.read(spark, tableDir)
   }
 
@@ -80,13 +106,7 @@ object StreamingTx {
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     require(schema.fieldNames.contains(keyCol), s"$keyCol not in schema")
     require(schema.fieldNames.contains(orderCol), s"$orderCol not in schema")
-    val reader = spark.readStream
-      .format("csv")
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val q = reader.load(rawDir)
+    val q = csvStream(spark, rawDir, schema, maxFilesPerTrigger)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import org.apache.spark.sql.functions.{col, expr}

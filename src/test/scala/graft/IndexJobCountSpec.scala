@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{GraphAnnIndex, IvfIndex, PqIndex, Similarity}
 import graft.pipeline.{Dashboard, DiabetesPipeline, PipelineGraph, RunContext}
-import graft.sources.{TxLog, TxPublish}
+import graft.sources.{SmallTable, TxLog, TxPublish}
 
 /** Spark JOBS PER MAINTENANCE WINDOW (and per medallion DAG run), pinned exactly — the standing
   * regression net the round-18 steal adjudication asked for: the
@@ -115,27 +115,35 @@ class IndexJobCountSpec extends AnyFunSuite with SparkTestBase {
     assert(jobs === GannJobs, s"GraphAnnIndex window job shape changed: $jobs")
   }
 
-  /** The benchmark's arrival DAG over a 2k-row bronze: every table node
-    * but the feature correlation, committed through TxLog, the run
-    * published. */
-  private def arrivalDag(work: String): () => Unit = {
-    val bronze = PimaFixture.bronze(spark, 2000)
-    val defs = DiabetesPipeline.tableDefs(spark, RunContext.golden, _ => bronze)
+  /** The benchmark's arrival: a 2k-row shard lands in the stream's TxLog
+    * table (every row with a file name, as the CSV stream gives it), then
+    * the DAG runs over that table's read — every table node but the
+    * feature correlation, committed through TxLog, the run published. */
+  private final class ArrivalDag(work: String) {
+    private val stream = s"$work/_stream/bronze"
+    private val shard = PimaFixture.bronze(spark, 2000)
+      .withColumn("file_name", coalesce(col("file_name"), lit("pima_0")))
+    private val defs = DiabetesPipeline.tableDefs(spark, RunContext.golden,
+        _ => SmallTable.onePartition(TxLog.read(spark, stream)))
       .filterNot(_.name == "diabetes_feature_correlation")
-    () => PipelineGraph.run(spark, defs, work, transactionalSinks = true, publishRun = true): Unit
+    def land(): Unit = TxLog.append(spark, stream, shard): Unit
+    def run(): Unit =
+      PipelineGraph.run(spark, defs, work, transactionalSinks = true, publishRun = true): Unit
   }
 
   test("arrival-shaped transactional DAG run: job count is pinned") {
-    val arrive = arrivalDag(root("jobs-dag"))
-    arrive()
-    val jobs = countJobs(arrive())
+    val dag = new ArrivalDag(root("jobs-dag"))
+    dag.land(); dag.run()
+    dag.land()
+    val jobs = countJobs(dag.run())
     info(s"arrival DAG run jobs: $jobs")
     assert(jobs === DagJobs, s"arrival DAG job shape changed: $jobs")
   }
 
   test("one dashboard round over the published run: job count is pinned") {
     val work = root("jobs-dash")
-    arrivalDag(work)()
+    val dag = new ArrivalDag(work)
+    dag.land(); dag.run()
     // the benchmark's dashboard round: the run resolved once, then the
     // 6 dashboard queries over it
     val resolveJobs = countJobs {
@@ -223,13 +231,16 @@ class IndexJobCountSpec extends AnyFunSuite with SparkTestBase {
   private val IvfJobs = 15
   private val PqJobs = 15
   private val GannJobs = 67
-  // The arrival DAG's 10 table nodes each commit one staged write
-  // (overwrite); silver adds its one medians job. Every table is under
-  // the small-table threshold, so each node reads its upstream on one
-  // partition and its write is a single job with no AQE stage jobs
+  // The arrival DAG's 8 table nodes past bronze each commit one staged
+  // write (overwrite); silver adds its one medians job. Every table is
+  // under the small-table threshold, so each node reads its upstream on
+  // one partition and its write is a single job with no AQE stage jobs
   // (26 while every aggregate still shuffled). Before in-write stats
-  // each staged write also paid a stats groupBy-by-file scan.
-  private val DagJobs = 11
+  // each staged write also paid a stats groupBy-by-file scan. The two
+  // bronze nodes mirror the shard's files by hard link: bronze runs one
+  // job, its valid_file count over the new rows, and the materialized
+  // copy none (11 while both rewrote the whole table).
+  private val DagJobs = 10
   // One job per dashboard query over the one-partition gold tables;
   // bmi_distribution's scalar subquery runs as a job of its own.
   private val DashboardJobs = Map("kpi_cards" -> 1, "rate_by_age_group" -> 1,

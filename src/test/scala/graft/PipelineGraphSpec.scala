@@ -32,6 +32,32 @@ class PipelineGraphSpec extends AnyFunSuite with SparkTestBase {
     assertThrows[IllegalArgumentException](PipelineGraph.topoOrder(defs))
   }
 
+  test("a failing node with two dependents raises one error naming it; the pool rejects no task") {
+    import spark.implicits._
+    val work = graft.Scratch.dir("graft-graph-fail").toString
+    // behind "left", a chain of dependents whose failures settle one by
+    // one after the run's own wait has seen the first failure
+    val chain = (1 to 10).map(i => node(s"left_$i", if (i == 1) "left" else s"left_${i - 1}")(r => r("left")))
+    val defs = Seq(
+      node("root")(_ => Seq(1).toDF("x")),
+      node("bad", "root")(_ => sys.error("boom")),
+      node("right", "bad")(r => r("bad")),
+      node("left", "bad")(r => r("bad"))) ++ chain
+    // the pool's executor reports a rejected task on stderr
+    spark.sparkContext: Unit // the session logs its start there
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val e = try {
+      val thrown = intercept[RuntimeException](PipelineGraph.run(spark, defs, work))
+      Thread.sleep(500) // a task rejected after the run returned prints by now
+      thrown
+    } finally System.setErr(saved)
+    assert(e.getMessage === "pipeline node 'bad' failed: boom")
+    val rejected = err.toString.linesIterator.filter(_.contains("RejectedExecutionException")).toSeq
+    assert(rejected.isEmpty, rejected.mkString("\n"))
+  }
+
   test("drop expectation filters rows AND records the violation count") {
     import spark.implicits._
     val work = graft.Scratch.dir("graft-graph").toString

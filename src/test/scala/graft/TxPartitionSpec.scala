@@ -44,6 +44,18 @@ class TxPartitionSpec extends AnyFunSuite with SparkTestBase {
     assert(snap2.files.forall(_.pv.contains("grp")))
   }
 
+  test("a non-ASCII partition value stages and reads back under any filename encoding") {
+    import spark.implicits._
+    val dir = tmp()
+    val rows = Seq((1L, "été"), (2L, "été"), (3L, "ete"), (4L, "a/b c%"))
+    TxLog.appendPartitioned(spark, dir, rows.toDF("id", "grp"), Seq("grp"))
+    val snap = TxLog.snapshot(dir)
+    assert(snap.files.map(_.pv("grp")).toSet === Set("été", "ete", "a/b c%"))
+    assert(TxLog.readPartition(spark, dir, Map("grp" -> "été")).select("id").as[Long]
+      .collect().toSet === Set(1L, 2L))
+    assert(TxLog.read(spark, dir).as[(Long, String)].collect().toSet === rows.toSet)
+  }
+
   test("readPartition opens zero foreign files, without reading stats") {
     val dir = tmp()
     TxLog.appendPartitioned(spark, dir, df(0 until 30), Seq("grp"))
