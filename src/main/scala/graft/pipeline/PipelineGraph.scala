@@ -231,16 +231,14 @@ object PipelineGraph {
             if (transactionalSinks) {
               require(t.partitionBy.size <= 1,
                 s"${t.name}: transactional sinks support at most one partition column")
-              val source = if (t.partitionBy.isEmpty) TxLog.readSource(built) else None
+              val source = if (t.partitionBy.isEmpty) Mirror.source(built) else None
               val (v, c) = source.flatMap(Mirror.refresh(spark, t, sink, _)).getOrElse {
                 val (filtered, observed) = observeAndDrop(t, built)
-                val v = source match {
-                  case Some(s) =>
-                    TxLog.overwriteAt(spark, sink, filtered, TxLog.latestVersion(sink),
-                      Some((Mirror.appId(s), s.version)), () => Mirror.props(t.expectations, observed()))
-                  case None if t.partitionBy.isEmpty => TxLog.overwrite(spark, sink, filtered)
-                  case None => TxLog.replaceWhereIn(spark, sink, filtered, t.partitionBy.head)
-                }
+                val v =
+                  if (t.partitionBy.nonEmpty) TxLog.replaceWhereIn(spark, sink, filtered, t.partitionBy.head)
+                  else TxLog.overwriteAt(spark, sink, filtered, TxLog.latestVersion(sink),
+                    source.map(s => (s.app, s.version)),
+                    () => if (source.isDefined) Mirror.props(t.expectations, observed()) else Map.empty)
                 (v, observed())
               }
               committedVersions.put(t.name, v): Unit

@@ -5651,13 +5651,17 @@ object TxLog {
       s"$dstDir was created concurrently; clone aborted")
   }
 
+  /** Makes the hard link `to` of the existing file `from`. A seam: tests
+    * replace it to fail as link(2) does across filesystems (EXDEV). */
+  private[graft] var hardLink: (Path, Path) => Unit = (to, from) => Files.createLink(to, from): Unit
+
   /** Hard-link `srcDir/rel` to `dstDir/rel`; an existing link (a re-run
-    * after a crash) is kept. */
-  private def linkFile(srcDir: String, dstDir: String, rel: String): Unit = {
+    * after a crash) is kept. Returns whether it made the link. */
+  private def linkFile(srcDir: String, dstDir: String, rel: String): Boolean = {
     val to = Paths.get(dstDir, rel)
     Files.createDirectories(to.getParent)
-    try Files.createLink(to, Paths.get(srcDir, rel)): Unit
-    catch { case _: FileAlreadyExistsException => () }
+    try { hardLink(to, Paths.get(srcDir, rel)); true }
+    catch { case _: FileAlreadyExistsException => false }
   }
 
   /** Whether files of `src` can join `dst` by reference
@@ -5682,11 +5686,20 @@ object TxLog {
     * as [[appendBatch]] does, so a replayed batch commits nothing and
     * returns None. `props` ride the same commit. Creates the table, with
     * schema `ddl`, when it has no log. The caller checks
-    * [[linkable]]. */
+    * [[linkable]]. When a link fails (the tables are on different
+    * filesystems, or the filesystem has no hard links) the links this
+    * call made are removed and the IOException is rethrown; nothing is
+    * committed. */
   def appendLinked(srcDir: String, dir: String, ddl: String, files: Seq[AddFile],
       appId: String, batchId: Long, props: Map[String, String] = Map.empty): Option[Long] = {
     Files.createDirectories(Paths.get(dir))
-    files.foreach(f => linkFile(srcDir, dir, f.path))
+    val made = scala.collection.mutable.ArrayBuffer.empty[Path]
+    try files.foreach(f => if (linkFile(srcDir, dir, f.path)) made += Paths.get(dir, f.path))
+    catch {
+      case e: java.io.IOException =>
+        made.foreach(Files.deleteIfExists(_): Unit)
+        throw e
+    }
     val want = StructType.fromDDL(ddl).fields.map(f => (f.name, f.dataType)).toSeq
     var tries = 0
     while (tries < maxCommitAttempts) {
@@ -6936,6 +6949,80 @@ object TxLog {
       "n_files_removed", "txn_app", "txn_batch", "metrics")
   }
 
+  /** One commit's actions, as the log-range readers use them. */
+  private[graft] final case class LogCommit(version: Long, op: String, ts: Long, adds: Seq[AddFile],
+      removes: Seq[String], schemaDdl: Option[String], txn: Option[(String, Long)]) {
+    /** Only new rows: no remove, no schema change, no rewrite
+      * (`dataChange=false`) and no deletion vector. */
+    def appendOnly: Boolean =
+      removes.isEmpty && (version == 0L || schemaDdl.isEmpty) &&
+        adds.forall(a => a.dataChange && a.dv.isEmpty)
+  }
+
+  /** Commit `v` of the table at `dir`, or None when it is not in the log
+    * (never written, or removed by log cleanup). */
+  private[graft] def logCommit(dir: String, v: Long): Option[LogCommit] = {
+    val f = versionFile(dir, v)
+    if (!Files.exists(f)) None
+    else {
+      val j = parse(Files.readString(f))
+      val removes = (j \ "removes") match {
+        case JArray(rs) => rs.map(jStr)
+        case _ => Nil
+      }
+      val txn = (j \ "txn") match {
+        case JObject(_) => Some((jStr(j \ "txn" \ "app"), jLong(j \ "txn" \ "batch")))
+        case _ => None
+      }
+      Some(LogCommit(v, jStr(j \ "op"), jLong(j \ "ts"), parseAdds(j \ "adds"), removes, jStrOpt(j \ "schema"), txn))
+    }
+  }
+
+  /** Thrown when an incremental read's range starts below the retained
+    * log (see [[cleanupLog]]). */
+  final class LogCleanedException(msg: String) extends IllegalStateException(msg)
+
+  /** The commits of `(fromExclusive, toInclusive]` in the log, oldest
+    * first. Log-cleanup guard: serving a change range that predates the
+    * retained log would silently OMIT changes — refuse instead. */
+  private def commitsBetween(dir: String, fromExclusive: Long,
+      toInclusive: Long): Seq[LogCommit] = {
+    val (commits, _) = listLog(dir)
+    if (commits.nonEmpty && fromExclusive < commits.min - 1)
+      throw new LogCleanedException(
+        s"$dir: versions below ${commits.min} were removed by log cleanup — " +
+          s"an incremental read from $fromExclusive cannot be complete; " +
+          s"start from version ${commits.min - 1} or later (streams: set startingVersion)")
+    commits.sorted.filter(v => v > fromExclusive && v <= toInclusive).flatMap(logCommit(dir, _))
+  }
+
+  /** The `dataChange=true` AddFiles of `(fromExclusive, toInclusive]` —
+    * the file set one streaming micro-batch of
+    * [[graft.sources.TxLogSource]] delivers. Same rewrite-exclusion
+    * rule as [[readChanges]]. Full AddFiles, not paths: a CLONE commit's
+    * initial adds may carry deletion vectors, and a path-only scan
+    * would deliver the dead rows back. */
+  def changedFilesBetween(dir: String, fromExclusive: Long,
+      toInclusive: Long): Seq[AddFile] =
+    commitsBetween(dir, fromExclusive, toInclusive).flatMap(_.adds.filter(_.dataChange))
+
+  /** The files the commits `(fromExclusive, toInclusive]` added, when
+    * every one of them is in the log and [[LogCommit.appendOnly]]. None
+    * otherwise — the caller then cannot extend a copy of
+    * `fromExclusive` to `toInclusive` by these files alone. */
+  def appendedFilesBetween(dir: String, fromExclusive: Long,
+      toInclusive: Long): Option[Seq[AddFile]] = {
+    val cs = try commitsBetween(dir, fromExclusive, toInclusive)
+      catch { case _: LogCleanedException => return None }
+    Option.when(cs.size == toInclusive - fromExclusive && cs.forall(_.appendOnly))(cs.flatMap(_.adds))
+  }
+
+  /** DV-aware scan of a batch's AddFiles under `snap`'s schema/mapping —
+    * the streaming source's entry ([[changedFilesBetween]]'s output). */
+  private[graft] def scanAdds(spark: SparkSession, dir: String,
+      snap: Snapshot, files: Seq[AddFile]): DataFrame =
+    scanFiles(spark, dir, snap, files)
+
   /** Rows INSERTED after `fromVersionExclusive`, each tagged with
     * `_commit_version` — the change-feed-lite surface an incremental
     * consumer polls (`readChanges(dir, lastSeen)` → process → remember
@@ -6948,71 +7035,11 @@ object TxLog {
     * consumer that must see deletions diffs snapshots. [[update]]
     * commits contribute exactly their updated rows (the rewritten
     * unchanged remainder is dataChange=false). */
-  /** The `dataChange=true` AddFiles of `(fromExclusive, toInclusive]` —
-    * the file set one streaming micro-batch of
-    * [[graft.sources.TxLogSource]] delivers. Same rewrite-exclusion
-    * rule as [[readChanges]]. Full AddFiles, not paths: a CLONE commit's
-    * initial adds may carry deletion vectors, and a path-only scan
-    * would deliver the dead rows back. */
-  def changedFilesBetween(dir: String, fromExclusive: Long,
-      toInclusive: Long): Seq[AddFile] = {
-    val (commits, _) = listLog(dir)
-    // log-cleanup guard: serving a change stream whose range predates
-    // the retained log would silently OMIT changes — refuse instead
-    if (commits.nonEmpty && fromExclusive < commits.min - 1)
-      throw new IllegalStateException(
-        s"$dir: versions below ${commits.min} were removed by log cleanup — " +
-          s"an incremental read from $fromExclusive cannot be complete; " +
-          s"start from version ${commits.min - 1} or later (streams: set startingVersion)")
-    commits.sorted.filter(v => v > fromExclusive && v <= toInclusive).flatMap { v =>
-      parseAdds(parse(Files.readString(versionFile(dir, v))) \ "adds")
-        .filter(_.dataChange)
-    }
-  }
-
-  /** The files the commits `(fromExclusive, toInclusive]` added, when
-    * every one of them only appended: no remove, no schema change, no
-    * rewrite (`dataChange=false`) and no deletion vector. None when any
-    * commit did more, or when log cleanup removed part of the range —
-    * the caller then cannot extend a copy of `fromExclusive` to
-    * `toInclusive` by these files alone. */
-  def appendedFilesBetween(dir: String, fromExclusive: Long,
-      toInclusive: Long): Option[Seq[AddFile]] = {
-    val have = listLog(dir)._1.toSet
-    val range = (fromExclusive + 1) to toInclusive
-    if (!range.forall(have)) return None
-    val perCommit = range.map { v =>
-      val j = parse(Files.readString(versionFile(dir, v)))
-      val adds = parseAdds(j \ "adds")
-      val appendOnly = ((j \ "removes") match {
-          case JArray(rs) => rs.isEmpty
-          case _ => true
-        }) && (v == 0L || jStrOpt(j \ "schema").isEmpty) &&
-        adds.forall(a => a.dataChange && a.dv.isEmpty)
-      Option.when(appendOnly)(adds)
-    }
-    if (perCommit.forall(_.nonEmpty)) Some(perCommit.flatten.flatten) else None
-  }
-
-  /** DV-aware scan of a batch's AddFiles under `snap`'s schema/mapping —
-    * the streaming source's entry ([[changedFilesBetween]]'s output). */
-  private[graft] def scanAdds(spark: SparkSession, dir: String,
-      snap: Snapshot, files: Seq[AddFile]): DataFrame =
-    scanFiles(spark, dir, snap, files)
-
   def readChanges(spark: SparkSession, dir: String,
       fromVersionExclusive: Long): DataFrame = {
-    val (commits, _) = listLog(dir)
-    if (commits.isEmpty)
+    if (latestVersion(dir) < 0)
       throw new VersionNotFoundException(s"$dir has no committed versions")
-    val fromExclusive = fromVersionExclusive
-    // log-cleanup guard: serving a change stream whose range predates
-    // the retained log would silently OMIT changes — refuse instead
-    if (commits.nonEmpty && fromExclusive < commits.min - 1)
-      throw new IllegalStateException(
-        s"$dir: versions below ${commits.min} were removed by log cleanup — " +
-          s"an incremental read from $fromExclusive cannot be complete; " +
-          s"start from version ${commits.min - 1} or later (streams: set startingVersion)")
+    val window = commitsBetween(dir, fromVersionExclusive, Long.MaxValue)
 
     // All files scan under the LATEST snapshot's physical names: a
     // physical name never changes once assigned, so the latest mapping
@@ -7024,14 +7051,13 @@ object TxLog {
     // WINDOW's commit JSONs below, never from the snapshot).
     val latest = headState(dir)
     val out = latest.schema.add(StructField("_commit_version", LongType, nullable = false))
-    val groups = commits.sorted.filter(_ > fromVersionExclusive).flatMap { v =>
-      val j = parse(Files.readString(versionFile(dir, v)))
+    val groups = window.flatMap { c =>
       // dataChange=false adds are rewrites of rows an earlier version
       // already delivered (OPTIMIZE outputs, merge/replaceWhere
       // remainders, restore re-adds) — never part of the change feed.
-      val adds = parseAdds(j \ "adds").filter(_.dataChange)
-      if (jStr(j \ "op") == "optimize" || adds.isEmpty) None
-      else Some((v, adds))
+      val adds = c.adds.filter(_.dataChange)
+      if (c.op == "optimize" || adds.isEmpty) None
+      else Some((c.version, adds))
     }
     groups
       .map { case (v, adds) =>
