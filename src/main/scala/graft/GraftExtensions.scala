@@ -73,6 +73,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // keep whole-stage codegen via a row-index mask instead of the V1
     // anti-join fallback (see graft.plans.DvMaskRewrite).
     ext.injectOptimizerRule(_ => graft.plans.DvMaskRewrite)
+    // Analysis rule: a bare count(*) of a TxLog.read frame is answered
+    // from the snapshot's row count (see graft.plans.LogCountRewrite).
+    ext.injectPostHocResolutionRule(_ => graft.plans.LogCountRewrite)
     // Planner strategy: broadcast interval-index range join (tier (c) of
     // the Catalyst ladder — custom LogicalPlan + Strategy + SparkPlan).
     ext.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)

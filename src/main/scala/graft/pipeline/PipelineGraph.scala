@@ -163,7 +163,10 @@ object PipelineGraph {
     * version (full refresh = transactional overwrite; partitioned nodes
     * = replaceWhereIn on the partition column), so a crashed run never
     * leaves a half-written table, every previous run stays readable via
-    * time travel, and concurrent readers are snapshot-isolated.
+    * time travel, and concurrent readers are snapshot-isolated. The
+    * re-read of each sink is a [[TxLog.read]]: its file list and its
+    * row count come from the log, so the re-read lists no directory
+    * and a bare count of it runs no job.
     * Single-column partitionBy only in this mode. An unpartitioned node
     * whose build is a bare read of a TxLog table ([[TxLog.readSource]])
     * is refreshed as a [[Mirror]] of that table: only the files it added

@@ -58,9 +58,13 @@ object DvMaskRewrite extends Rule[LogicalPlan] {
     case other => other.mapChildren(rewrite)
   }
 
-  private def isBareCountStar(aggs: Seq[NamedExpression]): Boolean =
+  /** Every output is `count(<non-null literal>)` (`count(*)` analyzes
+    * to `count(1)`): each counts all rows. Shared with
+    * [[LogCountRewrite]]. */
+  private[plans] def isBareCountStar(aggs: Seq[NamedExpression]): Boolean =
     aggs.nonEmpty && aggs.forall {
-      case Alias(AggregateExpression(Count(Seq(Literal(1, _))), _, false, None, _), _) => true
+      case Alias(AggregateExpression(Count(Seq(l: Literal)), _, false, None, _), _) =>
+        l.value != null
       case _ => false
     }
 

@@ -34,16 +34,19 @@ private[sources] final class GraftFileIndex(
     // consumer of the log uses
     val v1 = dataFilters.flatMap(
       org.apache.spark.sql.graft.GraftSqlShims.translateV1Filter)
-    val files = survivorsOf(v1).map { a =>
-      new FileStatus(a.bytes, false, 1, 128L << 20, 0L,
-        new Path(java.nio.file.Paths.get(dir, a.path).toUri))
-    }
+    // modification time 0: the log records none, and the engine never
+    // reads `_metadata.file_modification_time`
+    val files = survivorsOf(v1).map(a =>
+      new FileStatus(a.bytes, false, 1, 128L << 20, 0L, new Path(uriOf(a))))
     Seq(PartitionDirectory(InternalRow.empty, files.toArray))
   }
 
+  private def uriOf(a: TxLog.AddFile): java.net.URI =
+    java.nio.file.Paths.get(dir, a.path).toUri
+
+  /** File URIs, as Spark's own file indexes report them. */
   override def inputFiles: Array[String] =
-    survivorsOf(Nil).map(a =>
-      java.nio.file.Paths.get(dir, a.path).toString).toArray
+    survivorsOf(Nil).map(uriOf(_).toString).toArray
   override def refresh(): Unit = ()
   override def sizeInBytes: Long = totalBytes
 }

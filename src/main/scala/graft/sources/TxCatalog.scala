@@ -774,20 +774,12 @@ object TxCatalog {
       totalBytes: Long, schema: StructType, physSchema: StructType)
       : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val session = SparkSession.active
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val deadMap = deadMapOf(session, dir, snapV,
       dvFiles.flatMap(_.dv.map(_.path)).distinct)
-    def rel(withDv: Boolean): org.apache.spark.sql.DataFrame = {
-      val sub = (fs: Seq[Filter]) =>
-        survivorsOf(fs).filter(_.dv.nonEmpty == withDv)
-      val idx = new GraftFileIndex(dir, sub, totalBytes)
-      val fsRel = HadoopFsRelation(idx, StructType(Nil), physSchema, None,
-        new ParquetFileFormat(), Map.empty[String, String])(session)
-      org.apache.spark.sql.graft.GraftSqlShims.dataFrameOfPlan(session,
-        LogicalRelation(fsRel, isStreaming = false))
-    }
+    def rel(withDv: Boolean): org.apache.spark.sql.DataFrame =
+      TxLog.fileScan(session, dir, physSchema, totalBytes,
+        fs => survivorsOf(fs).filter(_.dv.nonEmpty == withDv))
     def renamed(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
       if (physSchema == schema) df
       else df.toDF(schema.fieldNames.toSeq: _*)

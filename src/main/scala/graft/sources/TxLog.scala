@@ -801,11 +801,47 @@ object TxLog {
     candidates.filter(f => paths.contains(f.path))
   }
 
+  /** A scan of logged files under `physSchema`, through the log's own
+    * [[GraftFileIndex]]: the file list and the file lengths come from
+    * the AddFiles, so building the frame touches no file. A
+    * `spark.read.parquet` of the same paths checks every one of them
+    * and, past `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * (32) paths, lists them in a Spark job. `survivorsOf` maps a plan's
+    * pushed filters to the files the scan opens. Every read of files
+    * the log holds builds its relation here; files not yet in the log
+    * (a staged directory, CONVERT's candidates) keep `spark.read`. */
+  private[sources] def fileScan(spark: SparkSession, dir: String,
+      physSchema: StructType, totalBytes: Long,
+      survivorsOf: Seq[org.apache.spark.sql.sources.Filter] => Seq[AddFile]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // nullable, as `spark.read` scans: an older file may lack a column
+    val rel = HadoopFsRelation(new GraftFileIndex(dir, survivorsOf, totalBytes),
+      StructType(Nil), org.apache.spark.sql.graft.GraftSqlShims.asNullable(physSchema),
+      None, new ParquetFileFormat(), Map.empty[String, String])(session)
+    org.apache.spark.sql.graft.GraftSqlShims.dataFrameOfPlan(session,
+      LogicalRelation(rel, isStreaming = false))
+  }
+
+  /** [[fileScan]] of `files` under `snap`'s physical schema. Pushed
+    * filters prune through [[pruneByFilters]], as a SQL read of the
+    * table does; on a column-mapped table they arrive under physical
+    * names, which the pruner does not resolve, so every file is kept. */
+  private def logScan(spark: SparkSession, dir: String, snap: Snapshot,
+      files: Seq[AddFile]): DataFrame = {
+    val survivorsOf: Seq[org.apache.spark.sql.sources.Filter] => Seq[AddFile] =
+      if (colMapOf(snap.props).nonEmpty) _ => files
+      else fs => if (fs.isEmpty) files else pruneByFilters(snap.copy(files = files), fs, Some(dir))
+    fileScan(spark, dir, physicalSchema(snap), files.map(_.bytes).sum, survivorsOf)
+  }
+
   /** Scan `files` under PHYSICAL names, rename to the LOGICAL schema;
     * `tagPath` optionally appends `_metadata.file_path` (captured BEFORE
     * the rename — metadata columns do not survive a projection) under
     * the given name. Identity-mapped tables take the exact pre-mapping
-    * plan (no extra Project node).
+    * plan (no extra Project node). The file list comes from the log
+    * ([[logScan]]), never from a listing.
     *
     * Files carrying a deletion vector are scanned separately and
     * anti-joined on `(relative path, _metadata.row_index)` against their
@@ -817,25 +853,23 @@ object TxLog {
   private def scanFiles(spark: SparkSession, dir: String, snap: Snapshot,
       files: Seq[AddFile], tagPath: Option[String] = None): DataFrame = {
     val (dvFiles, clean) = files.partition(_.dv.nonEmpty)
-    if (dvFiles.isEmpty)
-      return scanPaths(spark, snap, files.map(f => Paths.get(dir, f.path).toString), tagPath)
-    val phys = physicalSchema(snap)
-    val base = spark.read.schema(phys)
-      .parquet(dvFiles.map(f => Paths.get(dir, f.path).toString): _*)
+    def logical(df: DataFrame): DataFrame =
+      if (physicalSchema(snap) == snap.schema) df
+      else df.toDF((snap.schema.fieldNames.toSeq ++ tagPath.toSeq): _*)
+    def withPath(df: DataFrame): DataFrame =
+      tagPath.fold(df)(n => df.withColumn(n, col("_metadata.file_path")))
+    lazy val cleanScan = logical(withPath(logScan(spark, dir, snap, clean)))
+    if (dvFiles.isEmpty) return cleanScan
+    val base = logScan(spark, dir, snap, dvFiles)
       .withColumn("__dv_p", relPathCol)
       .withColumn("__dv_i", col("_metadata.row_index").cast(LongType))
-    val tagged = tagPath.fold(base)(n => base.withColumn(n, col("_metadata.file_path")))
+    val tagged = withPath(base)
     val dv = dvFrame(spark, dir, dvFiles.flatMap(_.dv.map(_.path)).distinct)
-    val filtered = tagged.join(dv,
+    val dvScan = logical(tagged.join(dv,
         tagged("__dv_p") === dv("__dv_path") && tagged("__dv_i") === dv("__dv_idx"),
         "left_anti")
-      .drop("__dv_p", "__dv_i")
-    val dvScan =
-      if (phys == snap.schema) filtered
-      else filtered.toDF((snap.schema.fieldNames.toSeq ++ tagPath.toSeq): _*)
-    if (clean.isEmpty) dvScan
-    else scanPaths(spark, snap,
-      clean.map(f => Paths.get(dir, f.path).toString), tagPath).unionAll(dvScan)
+      .drop("__dv_p", "__dv_i"))
+    if (clean.isEmpty) dvScan else cleanScan.unionAll(dvScan)
   }
 
   /** Merge-on-read DML scan: every LIVE row (existing DVs applied) with
@@ -843,9 +877,7 @@ object TxLog {
     * — the coordinates a new deletion vector is written in. */
   private def scanLiveWithPos(spark: SparkSession, dir: String,
       snap: Snapshot): DataFrame = {
-    val phys = physicalSchema(snap)
-    val base = spark.read.schema(phys)
-      .parquet(snap.files.map(f => Paths.get(dir, f.path).toString): _*)
+    val base = logScan(spark, dir, snap, snap.files)
       .withColumn("__p", relPathCol)
       .withColumn("__i", col("_metadata.row_index").cast(LongType))
     val dvDirs = snap.files.flatMap(_.dv.map(_.path)).distinct
@@ -857,19 +889,8 @@ object TxLog {
           base("__p") === dv("__dv_path") && base("__i") === dv("__dv_idx"),
           "left_anti")
       }
-    if (phys == snap.schema) filtered
+    if (physicalSchema(snap) == snap.schema) filtered
     else filtered.toDF(snap.schema.fieldNames.toSeq ++ Seq("__p", "__i"): _*)
-  }
-
-  /** [[scanFiles]] over absolute paths — the streaming source's entry
-    * (its file lists come from [[changedFilesBetween]], not AddFiles). */
-  private[sources] def scanPaths(spark: SparkSession, snap: Snapshot,
-      paths: Seq[String], tagPath: Option[String] = None): DataFrame = {
-    val phys = physicalSchema(snap)
-    val base = spark.read.schema(phys).parquet(paths: _*)
-    val tagged = tagPath.fold(base)(n => base.withColumn(n, col("_metadata.file_path")))
-    if (phys == snap.schema) tagged
-    else tagged.toDF((snap.schema.fieldNames.toSeq ++ tagPath.toSeq): _*)
   }
 
   /** Rename a LOGICAL-schema frame to physical names before staging;
@@ -1653,8 +1674,17 @@ object TxLog {
     * Replays from the newest checkpoint at or below the target — O(
     * checkpointInterval) commit files regardless of table age. The
     * `_last_checkpoint` pointer picks the replay base without scanning
-    * the checkpoint listing; memoization serves repeat resolutions. */
+    * the checkpoint listing; memoization serves repeat resolutions.
+    * A version below the [[vacuumHorizon]] is refused. */
   def snapshot(dir: String, versionAsOf: Option[Long] = None): Snapshot = {
+    versionAsOf.foreach(requireRetained(dir, _))
+    replaySnapshot(dir, versionAsOf)
+  }
+
+  /** [[snapshot]] without the vacuum-horizon check: the log still
+    * replays below the horizon, and a checkpoint written there (by
+    * [[cleanupLog]]) needs only the file list, not the files. */
+  private def replaySnapshot(dir: String, versionAsOf: Option[Long]): Snapshot = {
     val (commits, ckpts) = listLog(dir)
     if (commits.isEmpty)
       throw new VersionNotFoundException(s"$dir has no committed versions")
@@ -1801,7 +1831,7 @@ object TxLog {
     writeCheckpoint(dir, v)
 
   private def writeCheckpoint(dir: String, v: Long): Unit = {
-    val meta = snapshotMeta(dir, Some(v))
+    val meta = replayMeta(dir, Some(v))
     // the TABLE's protocol, not this writer's capability — a
     // checkpoint must never lock protocol-1 readers out of a table
     // that uses no protocol-2 feature
@@ -1857,7 +1887,7 @@ object TxLog {
           s"$dir: parquet checkpoint shards need an active SparkSession")
       case (None, _) =>
         // inline (or absent) base → small by construction: replay fully
-        val files = snapshot(dir, Some(v)).files
+        val files = replaySnapshot(dir, Some(v)).files
         if (files.size <= ckptPartMaxFiles)
           publishCheckpointManifest(dir, v, base,
             base ~ ("files" -> files.map(addJson)), 0)
@@ -2009,6 +2039,26 @@ object TxLog {
       case None => false
     }
 
+  /** The vacuum horizon (FORMAT.md §6, VACUUM): the oldest version [[vacuum]]
+    * kept readable, recorded before it deleted any file an older
+    * version holds. Absent until such a vacuum ran. */
+  private def horizonFile(dir: String): Path = logDir(dir).resolve("_vacuum_horizon")
+
+  def vacuumHorizon(dir: String): Option[Long] = {
+    val p = horizonFile(dir)
+    if (!Files.exists(p)) None else Some(jLong(parse(Files.readString(p)) \ "keepFrom"))
+  }
+
+  /** Refuse a version whose files a vacuum may have deleted: a scan
+    * would fail on a missing file, and a count the log answers would
+    * not fail at all. */
+  private def requireRetained(dir: String, version: Long): Unit =
+    vacuumHorizon(dir).filter(version < _).foreach { h =>
+      throw new VersionNotFoundException(
+        s"version $version of $dir is below its vacuum horizon $h: VACUUM may " +
+          s"have deleted its files; versions $h and later are readable")
+    }
+
   private def readLastCheckpoint(dir: String): Option[Long] =
     try {
       val p = lastCkptFile(dir)
@@ -2085,6 +2135,11 @@ object TxLog {
     }
 
   def snapshotMeta(dir: String, versionAsOf: Option[Long] = None): SnapshotMeta = {
+    versionAsOf.foreach(requireRetained(dir, _))
+    replayMeta(dir, versionAsOf)
+  }
+
+  private def replayMeta(dir: String, versionAsOf: Option[Long]): SnapshotMeta = {
     val (commits, ckpts) = listLog(dir)
     if (commits.isEmpty)
       throw new VersionNotFoundException(s"$dir has no committed versions")
@@ -6543,6 +6598,8 @@ object TxLog {
 
   def restore(spark: SparkSession, dir: String, version: Long): Long = {
     writerGate(dir, "restore")
+    require(!vacuumHorizon(dir).exists(version < _),
+      s"restore: version $version is below the vacuum horizon; cannot restore")
     val readVersion = latestVersion(dir)
     // The restore's commit content IS the two-way live-set diff on
     // (path, deletion-vector state): re-add when the path is absent
@@ -6666,8 +6723,10 @@ object TxLog {
 
   /** Reclaim data files referenced by the log but live in NONE of the
     * newest `retainVersions` snapshots. Time travel (or [[restore]]) to
-    * a vacuumed version subsequently fails — the Delta retention trade;
-    * coordinate restore/vacuum operationally, a restore WITHIN the
+    * a vacuumed version subsequently fails — the Delta retention trade:
+    * before deleting any such file, vacuum records the oldest retained
+    * version as the table's [[vacuumHorizon]], and [[snapshot]] refuses
+    * versions below it. Coordinate restore/vacuum operationally, a restore WITHIN the
     * retained window is always safe. Staged-but-uncommitted files of an
     * IN-FLIGHT writer appear in no commit and are protected by the age
     * threshold: `staleStagingMillis` (default 7 days) additionally
@@ -6708,7 +6767,8 @@ object TxLog {
     // retainVersions larger than the retained commit count would
     // otherwise resolve snapshots below the log cut and fail
     val keepFromVersions = math.max(commits.min, latest - math.max(1, retainVersions) + 1)
-    val keepFrom = retainMillis match {
+    // versions below an earlier vacuum's horizon are unreadable already
+    val keepFrom = math.max(vacuumHorizon(dir).getOrElse(0L), retainMillis match {
       case None => keepFromVersions
       case Some(window) =>
         val cutoff = System.currentTimeMillis() - math.max(0L, window)
@@ -6720,7 +6780,7 @@ object TxLog {
         // no commit inside the window → the latest snapshot alone is
         // still always retained (a table must stay readable)
         math.min(keepFromVersions, firstInWindow.getOrElse(latest))
-    }
+    })
     val referenced = commits.flatMap { v =>
       (parseAdds(commitJsons(v) \ "adds") ++ parseAdds(commitJsons(v) \ "cdf")).map(_.path)
     }.toSet
@@ -6742,7 +6802,7 @@ object TxLog {
       else org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
     if (sharded && sparkOpt.isDefined)
-      return vacuumSharded(sparkOpt.get, dir, retainedMetas, referenced,
+      return vacuumSharded(sparkOpt.get, dir, keepFrom, retainedMetas, referenced,
         referencedDvDirs, cdfKept, staleStagingMillis, dryRun)
     val retainedSnaps = (keepFrom to latest).map(v => snapshot(dir, Some(v)))
     val kept = retainedSnaps.flatMap(_.files.map(_.path)).toSet ++ cdfKept
@@ -6751,21 +6811,8 @@ object TxLog {
     // its file re-DML'd, rewritten, or removed — ages out of the window
     // and is reclaimed whole)
     val keptDvDirs = retainedSnaps.flatMap(_.files.flatMap(_.dv.map(_.path))).toSet
-    val expiredDvDirs = (referencedDvDirs -- keptDvDirs).toSeq.sorted
-      .filter(sub => Files.isDirectory(Paths.get(dir, sub)))
-    val expiredDv = expiredDvDirs.flatMap { sub =>
-      val inDir = listStaged(dir, sub).map(n => s"$sub/$n")
-      if (!dryRun) deleteStaged(dir, sub)
-      inDir
-    }
-    val expired = (referenced -- kept).toSeq.sorted
-      .filter(rel =>
-        if (dryRun) Files.exists(Paths.get(dir, rel))
-        else {
-          // bloom sidecars die with their data file
-          deleteSidecars(dir, rel)
-          Files.deleteIfExists(Paths.get(dir, rel))
-        }) ++ expiredDv
+    val expired = expire(dir, keepFrom, (referenced -- kept).toSeq.sorted,
+      (referencedDvDirs -- keptDvDirs).toSeq.sorted, dryRun)
 
     // Dead staging: parquet under d-*/ that NO commit ever referenced,
     // older than the staleness window (an in-flight writer's fresh
@@ -6807,6 +6854,34 @@ object TxLog {
     expired ++ reclaimed
   }
 
+  /** Delete `files` (data or change files no retained version holds)
+    * and the DV directories `dvDirs`; under `dryRun`, only list what
+    * exists. When anything is to go, `keepFrom` is first recorded as
+    * the [[vacuumHorizon]], so no version below it reads as intact
+    * while its files are missing, even after a crash mid-delete. */
+  private def expire(dir: String, keepFrom: Long, files: Seq[String],
+      dvDirs: Seq[String], dryRun: Boolean): Seq[String] = {
+    val present = files.filter(rel => Files.exists(Paths.get(dir, rel)))
+    val presentDv = dvDirs.filter(sub => Files.isDirectory(Paths.get(dir, sub)))
+    if (!dryRun && (present.nonEmpty || presentDv.nonEmpty) &&
+        !vacuumHorizon(dir).exists(_ >= keepFrom))
+      logStore.putOverwrite(horizonFile(dir),
+        LogStore.bytes(compact(render("keepFrom" -> keepFrom))))
+    val expiredDv = presentDv.flatMap { sub =>
+      val inDir = listStaged(dir, sub).map(n => s"$sub/$n")
+      if (!dryRun) deleteStaged(dir, sub)
+      inDir
+    }
+    val expired =
+      if (dryRun) present
+      else files.filter { rel =>
+        // bloom sidecars die with their data file
+        deleteSidecars(dir, rel)
+        Files.deleteIfExists(Paths.get(dir, rel))
+      }
+    expired ++ expiredDv
+  }
+
   /** One retained version's LIVE entries as a (path, dvdir) frame —
     * never collected: [[vacuumSharded]] joins against it. */
   private def liveEntriesDf(spark: SparkSession, dir: String,
@@ -6841,7 +6916,7 @@ object TxLog {
     *    the driver only ever holds actual orphans.
     * The legacy path materializes the same sets on the driver — fine at
     * inline-checkpoint scale, GBs of heap at a million files. */
-  private def vacuumSharded(spark: SparkSession, dir: String,
+  private def vacuumSharded(spark: SparkSession, dir: String, keepFrom: Long,
       retainedMetas: Seq[SnapshotMeta], referenced: Set[String],
       referencedDvDirs: Set[String], cdfKept: Set[String],
       staleStagingMillis: Long, dryRun: Boolean): Seq[String] = {
@@ -6858,20 +6933,8 @@ object TxLog {
       .filter((r: org.apache.spark.sql.Row) =>
         r.getString(1) != null && refDvB.value.contains(r.getString(1)))
       .select("dvdir").distinct().collect().map(_.getString(0)).toSet
-    val expiredDvDirs = (referencedDvDirs -- keptDvRef).toSeq.sorted
-      .filter(sub => Files.isDirectory(Paths.get(dir, sub)))
-    val expiredDv = expiredDvDirs.flatMap { sub =>
-      val inDir = listStaged(dir, sub).map(n => s"$sub/$n")
-      if (!dryRun) deleteStaged(dir, sub)
-      inDir
-    }
-    val expired = (referenced -- keptRef -- cdfKept).toSeq.sorted
-      .filter(rel =>
-        if (dryRun) Files.exists(Paths.get(dir, rel))
-        else {
-          deleteSidecars(dir, rel)
-          Files.deleteIfExists(Paths.get(dir, rel))
-        }) ++ expiredDv
+    val expired = expire(dir, keepFrom, (referenced -- keptRef -- cdfKept).toSeq.sorted,
+      (referencedDvDirs -- keptDvRef).toSeq.sorted, dryRun)
 
     // dead staging, distributed: list the staging DIRS on the driver
     // (∝ commits), their contents on executors, anti-join the live sets
@@ -7203,17 +7266,20 @@ object TxLog {
       files: Seq[AddFile]): DataFrame = {
     val phys = physicalSchema(snap)
       .add(StructField(ChangeTypeCol, StringType, nullable = false))
-    val base = spark.read.schema(phys)
-      .parquet(files.map(f => Paths.get(dir, f.path).toString): _*)
+    val base = fileScan(spark, dir, phys, files.map(_.bytes).sum, _ => files)
     if (physicalSchema(snap) == snap.schema) base
     else base.toDF((snap.schema.fieldNames.toSeq :+ ChangeTypeCol): _*)
   }
 
-  /** Read the table at `versionAsOf` (default: latest). File list comes
-    * from the LOG (no directory listing); the schema is pinned from the
-    * log so empty tables and schema-only reads work without inference.
-    * The frame is tagged with the table and the version it reads
-    * ([[readSource]]). */
+  /** Read the table at `versionAsOf` (default: latest). Both the file
+    * list and the row count come from the LOG: the scan goes through
+    * the log's own file index ([[fileScan]]), so building the frame
+    * lists and opens no file, and the frame is tagged with the table,
+    * the version it reads and that snapshot's live row count
+    * ([[readSource]], [[readRows]]), so a bare `count()` of it is
+    * answered without a job ([[graft.plans.LogCountRewrite]]). The
+    * schema is pinned from the log, so empty tables and schema-only
+    * reads work without inference. */
   def read(spark: SparkSession, dir: String, versionAsOf: Option[Long] = None): DataFrame = {
     val snap = snapshot(dir, versionAsOf)
     val df =
@@ -7221,14 +7287,16 @@ object TxLog {
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
       else
         scanFiles(spark, dir, snap, snap.files)
-    df.queryExecution.analyzed.setTagValue(ReadTag, ReadSource(dir, snap.version))
+    df.queryExecution.analyzed.setTagValue(ReadTag, (ReadSource(dir, snap.version), snap.rows))
     df
   }
 
   /** The table directory and version a [[read]] frame reads. */
   final case class ReadSource(dir: String, version: Long)
 
-  private val ReadTag = TreeNodeTag[ReadSource]("graft.txlog.read")
+  /** Set on a [[read]] frame's analyzed plan: what it reads and the
+    * snapshot's live row count (DV-adjusted, [[Snapshot.rows]]). */
+  private val ReadTag = TreeNodeTag[(ReadSource, Long)]("graft.txlog.read")
 
   /** The table and version `df` reads when it is a bare [[read]]: the
     * read itself, or the read coalesced (as
@@ -7240,8 +7308,14 @@ object TxLog {
       case Repartition(_, false, child) => bare(child)
       case other => other
     }
-    bare(df.queryExecution.analyzed).getTagValue(ReadTag)
+    bare(df.queryExecution.analyzed).getTagValue(ReadTag).map(_._1)
   }
+
+  /** The live row count of the snapshot `plan` reads, when `plan` is a
+    * [[read]] frame's analyzed plan; that subtree yields exactly those
+    * rows. */
+  private[graft] def readRows(plan: LogicalPlan): Option[Long] =
+    plan.getTagValue(ReadTag).map(_._2)
 
   /** Stats-canon comparator: numeric types as BigDecimal, date/
     * timestamp/string lexically. None when a side cannot be parsed

@@ -32,6 +32,11 @@ object GraftSqlShims {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
 
+  /** `schema` with every field, element and value nullable
+    * (`StructType.asNullable`, private to spark) — what Spark's own file
+    * sources scan under, so a column a file lacks reads as NULL. */
+  def asNullable(schema: StructType): StructType = schema.asNullable
+
   /** Wrap an already-analyzed logical plan as a DataFrame (Dataset
     * .ofRows, package-private to sql) — the SQL MERGE strategy hands
     * the statement's resolved SOURCE plan to [[graft.sources.TxLog]]

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,29 +22,6 @@ class IndexJobCountSpec extends AnyFunSuite with SparkTestBase {
 
   private def root(name: String): String =
     graft.Scratch.dir(s"graft-$name").toString
-
-  /** Jobs submitted while `body` runs (listener-bus drained before the
-    * count is read, so late async submissions are included). The bus is
-    * ALSO drained before the listener attaches: an event posted by an
-    * earlier suite but still queued is dispatched to whatever listeners
-    * are registered at delivery time, so without the pre-drain a
-    * neighboring suite's stray job start bleeds +1 into this count —
-    * seen once as a full-suite-only 82-vs-81 flake. */
-  private def countJobs(body: => Unit): Int = {
-    org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
 
   /** The shared deterministic 8-dim generator (IvfIndexSpec's). */
   private def vecs(ids: Seq[Long]) = {
