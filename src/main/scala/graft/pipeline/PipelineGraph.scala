@@ -111,8 +111,8 @@ object PipelineResult {
   *     write the parquet sink, then re-read the sink so downstream nodes
   *     consume the materialized table exactly like `dlt.read` (S3/S5) —
   *     on one partition when the table is small (see [[run]]). With
-  *     transactional sinks, a node that only reads a TxLog table commits
-  *     that table's new files instead ([[Mirror]]).
+  *     transactional sinks, a row-wise node over one TxLog table appends
+  *     only what that table's new files make instead ([[Mirror]]).
   *  3. Per view node: no materialization, just registration (S4).
   *
   * Scale: each node is one Spark job over declarative DataFrames —
@@ -145,6 +145,23 @@ object PipelineGraph {
     * sink write + metric collection before dependents start. */
   private val Parallelism = 4
 
+  /** `t`'s expectations counted in the same pass as the write of
+    * `built`: returns the frame to write (Drop-mode violations filtered
+    * out) and the counts, readable once it is written. A node without
+    * expectations observes nothing: its metrics would go unread. */
+  private[pipeline] def observeAndDrop(t: TableDef, built: DataFrame): (DataFrame, () => ExpectationCounts) = {
+    val obs = Option.when(t.expectations.nonEmpty)(
+      Observation(s"${t.name}_expectations_${System.nanoTime()}"))
+    val observed = obs.fold(built) { o =>
+      val cols = ExpectationCounts.columns(t.expectations)
+      built.observe(o, cols.head, cols.tail: _*)
+    }
+    val filtered = t.expectations.filter(_.mode == Expectation.Drop)
+      .foldLeft(observed)((df, e) => df.filter(expr(e.predicate)))
+    (filtered, () => obs.fold(ExpectationCounts.zero(t.expectations))(o =>
+      ExpectationCounts.of(t.expectations, o.get)))
+  }
+
   /** Run the graph; sinks go under `workDir/<table>`.
     *
     * Every table node's sink is re-read through
@@ -167,11 +184,19 @@ object PipelineGraph {
     * re-read of each sink is a [[TxLog.read]]: its file list and its
     * row count come from the log, so the re-read lists no directory
     * and a bare count of it runs no job.
-    * Single-column partitionBy only in this mode. An unpartitioned node
-    * whose build is a bare read of a TxLog table ([[TxLog.readSource]])
-    * is refreshed as a [[Mirror]] of that table: only the files it added
-    * since the last mirrored version are committed, by hard link, and
-    * its expectation counts stay cumulative.
+    * Single-column partitionBy only in this mode. An unpartitioned
+    * ROW-WISE node — its build a chain of deterministic projections,
+    * filters and coalesces over one [[TxLog.read]] — is refreshed
+    * incrementally ([[Mirror]]): while its source only appended and
+    * its plan's fingerprint (literals included, so silver's medians)
+    * is the one its sink's head commit recorded, only the source's new
+    * files are committed — by hard link when the build is the bare
+    * read, else as the plan's output over those files — and its
+    * expectation counts stay cumulative. Any other node, or a row-wise
+    * node whose source or plan changed otherwise, takes the full
+    * overwrite. Under a live clock, rows appended this way keep the
+    * `current_timestamp()` of the run that appended them, where a full
+    * overwrite restamps every row.
     *
     * `publishRun` (requires `transactionalSinks`): after EVERY table
     * node's TxLog commit has landed, publish one
@@ -195,23 +220,6 @@ object PipelineGraph {
     val reader: PipelineResult.Reader = name =>
       results.getOrElse(name, sys.error(s"unknown upstream table: $name"))
 
-    // Violation counts observed in the same pass as the sink write. A node
-    // without expectations observes nothing: its metrics would go unread.
-    // Returns the frame to write (Drop-mode violations filtered out) and
-    // the counts, readable once it is written.
-    def observeAndDrop(t: TableDef, built: DataFrame): (DataFrame, () => ExpectationCounts) = {
-      val obs = Option.when(t.expectations.nonEmpty)(
-        Observation(s"${t.name}_expectations_${System.nanoTime()}"))
-      val observed = obs.fold(built) { o =>
-        val cols = ExpectationCounts.columns(t.expectations)
-        built.observe(o, cols.head, cols.tail: _*)
-      }
-      val filtered = t.expectations.filter(_.mode == Expectation.Drop)
-        .foldLeft(observed)((df, e) => df.filter(expr(e.predicate)))
-      (filtered, () => obs.fold(ExpectationCounts.zero(t.expectations))(o =>
-        ExpectationCounts.of(t.expectations, o.get)))
-    }
-
     def runNode(t: TableDef): DataFrame = try {
       runNodeInner(t)
     } catch {
@@ -234,14 +242,15 @@ object PipelineGraph {
             if (transactionalSinks) {
               require(t.partitionBy.size <= 1,
                 s"${t.name}: transactional sinks support at most one partition column")
-              val source = if (t.partitionBy.isEmpty) Mirror.source(built) else None
-              val (v, c) = source.flatMap(Mirror.refresh(spark, t, sink, _)).getOrElse {
+              val node = if (t.partitionBy.isEmpty) Mirror.rowWise(built) else None
+              val (v, c) = node.flatMap(Mirror.refresh(spark, t, sink, _)).getOrElse {
                 val (filtered, observed) = observeAndDrop(t, built)
                 val v =
                   if (t.partitionBy.nonEmpty) TxLog.replaceWhereIn(spark, sink, filtered, t.partitionBy.head)
                   else TxLog.overwriteAt(spark, sink, filtered, TxLog.latestVersion(sink),
-                    source.map(s => (s.app, s.version)),
-                    () => if (source.isDefined) Mirror.props(t.expectations, observed()) else Map.empty)
+                    node.map(n => (n.source.app, n.source.version)),
+                    () => node.fold(Map.empty[String, String])(n =>
+                      Mirror.props(t.expectations, observed(), n.fingerprint)))
                 (v, observed())
               }
               committedVersions.put(t.name, v): Unit

@@ -67,7 +67,12 @@ private[sources] object StagedWrite {
       val dataAttrs = output.filterNot(partAttrs.contains)
       val statIdx = statCols.map(c => dataAttrs.indexWhere(_.name == c))
       require(statIdx.forall(_ >= 0), s"stats columns ${statCols.mkString(",")} not all in the data")
-      val hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
+      // no `_SUCCESS` marker: no reader looks for one (a staged file
+      // joins the table through its commit), and on a local filesystem
+      // without Hadoop's native library each created file spawns a
+      // `chmod` process
+      val hadoopConf = spark.sessionState.newHadoopConfWithOptions(
+        Map("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false"))
       val out = new Path(path)
       val fs = out.getFileSystem(hadoopConf)
       val qualified = out.makeQualified(fs.getUri, fs.getWorkingDirectory).toString

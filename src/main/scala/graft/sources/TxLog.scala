@@ -3219,7 +3219,9 @@ object TxLog {
     * rebase re-reads the log, sees the winner's txn, and backs off.
     * Returns Some(version) when this call committed, None when the batch
     * was already in the table. `props` are table properties set by the
-    * same commit.
+    * same commit, evaluated once, after `df` is staged (so they may
+    * read metrics its write observed), and not at all for a batch
+    * already in the table.
     *
     * CAVEAT (shared with Delta's txn action): the guard assumes a given
     * batchId always carries the SAME content. If the stream's checkpoint
@@ -3234,8 +3236,9 @@ object TxLog {
     * ledger, where a batch is a fixed set of ledger rows). */
   def appendBatch(spark: SparkSession, dir: String, df: DataFrame,
       appId: String, batchId: Long,
-      props: Map[String, String] = Map.empty): Option[Long] = {
+      props: => Map[String, String] = Map.empty): Option[Long] = {
     Files.createDirectories(Paths.get(dir))
+    lazy val commitProps = props
     def seen(h: Option[Snapshot]): Boolean =
       h.exists(_.txns.get(appId).exists(_ >= batchId))
     val pre = headSnapshot(dir)
@@ -3297,7 +3300,7 @@ object TxLog {
           }
         val content = commitJson(attempt, "streamingAppend", System.currentTimeMillis(),
           adds, Nil, if (attempt == 0L) Some(ddl) else None, Some((appId, batchId)),
-          Option.when(props.nonEmpty || idProps.nonEmpty)(props ++ idProps))
+          Option.when(commitProps.nonEmpty || idProps.nonEmpty)(commitProps ++ idProps))
         if (tryPublish(dir, attempt, content)) {
           published = true
           maybeCheckpoint(dir, attempt)
@@ -7308,8 +7311,14 @@ object TxLog {
       case Repartition(_, false, child) => bare(child)
       case other => other
     }
-    bare(df.queryExecution.analyzed).getTagValue(ReadTag).map(_._1)
+    readSourceOf(bare(df.queryExecution.analyzed))
   }
+
+  /** The table and version `plan` reads when it is a [[read]] frame's
+    * analyzed plan, found inside a larger plan; that subtree yields
+    * exactly the snapshot's live rows. */
+  private[graft] def readSourceOf(plan: LogicalPlan): Option[ReadSource] =
+    plan.getTagValue(ReadTag).map(_._1)
 
   /** The live row count of the snapshot `plan` reads, when `plan` is a
     * [[read]] frame's analyzed plan; that subtree yields exactly those

@@ -105,6 +105,10 @@ class IndexJobCountSpec extends AnyFunSuite with SparkTestBase {
     def land(): Unit = TxLog.append(spark, stream, shard): Unit
     def run(): Unit =
       PipelineGraph.run(spark, defs, work, transactionalSinks = true, publishRun = true): Unit
+    def lastOp(table: String): Option[String] = {
+      val dir = s"$work/$table"
+      TxLog.logCommit(dir, TxLog.latestVersion(dir)).map(_.op)
+    }
   }
 
   test("arrival-shaped transactional DAG run: job count is pinned") {
@@ -114,6 +118,7 @@ class IndexJobCountSpec extends AnyFunSuite with SparkTestBase {
     val jobs = countJobs(dag.run())
     info(s"arrival DAG run jobs: $jobs")
     assert(jobs === DagJobs, s"arrival DAG job shape changed: $jobs")
+    assert(dag.lastOp("diabetes_silver") === Some("streamingAppend"))
   }
 
   test("one dashboard round over the published run: job count is pinned") {
@@ -215,7 +220,10 @@ class IndexJobCountSpec extends AnyFunSuite with SparkTestBase {
   // each staged write also paid a stats groupBy-by-file scan. The two
   // bronze nodes mirror the shard's files by hard link: bronze runs one
   // job, its valid_file count over the new rows, and the materialized
-  // copy none (11 while both rewrote the whole table).
+  // copy none (11 while both rewrote the whole table). The second
+  // arrival lands the same rows again, so silver's medians hold and it
+  // appends the new rows instead of overwriting: still its medians job
+  // plus one write, the expectation counts observed in that write.
   private val DagJobs = 10
   // One job per dashboard query over the one-partition gold tables;
   // bmi_distribution's scalar subquery runs as a job of its own.

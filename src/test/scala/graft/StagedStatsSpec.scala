@@ -2,6 +2,8 @@ package graft
 
 import java.sql.{Date, Timestamp}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -227,5 +229,16 @@ class StagedStatsSpec extends AnyFunSuite with SparkTestBase {
         assert((a.rows, a.stats) === ((want(a.path).rows, want(a.path).stats)), a.path)
       }
     }
+  }
+
+  test("a staged table directory holds no _SUCCESS marker") {
+    val dir = tmp()
+    TxLog.append(spark, dir, spark.range(0, 100, 1, 2).toDF("id"))
+    TxLog.append(spark, dir, spark.range(100, 200, 1, 2).toDF("id"))
+    assert(TxLog.snapshot(dir).files.nonEmpty)
+    val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    val markers = try w.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n == "_SUCCESS" || n == "._SUCCESS.crc").toList finally w.close()
+    assert(markers.isEmpty)
   }
 }
